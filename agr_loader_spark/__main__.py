@@ -32,23 +32,19 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--cores", type=int, default=None)
     p.add_argument("--n-buckets", type=int, default=32)
-    p.add_argument("--salt-buckets", type=int, default=16)
     p.add_argument("--stop-after", type=int, default=None,
                    help="crash-inject: stop after N segment commits")
     p.add_argument("--no-schema-changes", action="store_true")
-    p.add_argument("--sink", choices=["arrow", "jvm", "delta"], default="arrow",
+    p.add_argument("--sink", choices=["arrow", "delta"], default="arrow",
                    help="merge path: 2-stage Arrow state-colocated COW fold "
-                        "(default), pure-JVM join merge, or write-optimized "
-                        "merge-on-read delta sink (state never read during "
-                        "ingest; compacted after the last segment)")
+                        "(default) or write-optimized merge-on-read delta "
+                        "sink (state never read during ingest; compacted "
+                        "after the last segment)")
     p.add_argument("--pipeline", nargs="?", const="on", default="off",
-                   choices=["off", "on", "auto"],
+                   choices=["off", "on"],
                    help="async fold overlap: prefetch the next segment's "
                         "scan+shuffle (schema-aware) under the current fold. "
-                        "Bare --pipeline == on; auto probes both regimes on "
-                        "early segments (ABBA around the excluded segment-0 "
-                        "table build) and locks the faster "
-                        "(emitted as a pipeline_policy metrics record)")
+                        "Bare --pipeline == on")
     p.add_argument("--warmup", action="store_true",
                    help="run a small throwaway replay first so the timed run "
                         "measures steady-state (JIT/codegen warmed), as a "
@@ -61,7 +57,7 @@ def main(argv: list[str] | None = None) -> int:
     from .session import get_spark
     from .streaming.runner import ReplayRunner
 
-    pipeline_mode = {"off": False, "on": True, "auto": "auto"}[args.pipeline]
+    pipeline_mode = args.pipeline == "on"
     spark = get_spark("agr-loader-spark-replay", cores=args.cores)
     binlog = args.binlog or os.path.join(args.workdir, "binlog")
     table_root = args.table or os.path.join(args.workdir, "tokens_table")
@@ -91,19 +87,17 @@ def main(argv: list[str] | None = None) -> int:
         spark, table_root, TOKENS_TABLE_COLUMNS, key=TOKENS_MERGE_KEY,
         n_buckets=args.n_buckets, if_not_exists=True,
     )
-    runner = ReplayRunner(spark, table, source_path=binlog,
-                          salt_buckets=args.salt_buckets, sink=args.sink,
+    runner = ReplayRunner(spark, table, source_path=binlog, sink=args.sink,
                           pipeline=pipeline_mode)
     t0 = time.monotonic()
     metrics = runner.run(stop_after=args.stop_after)
     wall = time.monotonic() - t0
 
-    # count only source-op records: run() also appends engine-side records
-    # (pipeline_policy from --pipeline auto, compact from the delta sink)
-    # that are neither applied nor skippable segments — counting them would
-    # break segments_applied/skipped bookkeeping across re-runs
-    seg_metrics = [m for m in metrics
-                   if m.get("operation") not in ("pipeline_policy", "compact")]
+    # count only source-op records: run() also appends the delta sink's
+    # compact record, which is neither an applied nor a skippable segment
+    # — counting it would break segments_applied/skipped bookkeeping
+    # across re-runs
+    seg_metrics = [m for m in metrics if m.get("operation") != "compact"]
     applied = [m for m in seg_metrics if not m.get("skipped")]
     skipped = len(seg_metrics) - len(applied)
     n_events = sum(m.get("n_events", 0) for m in applied)

@@ -1,8 +1,10 @@
-"""Arrow-native state-colocated MERGE — the engine's fast sink path.
+"""Arrow-native state-colocated MERGE — the engine's one copy-on-write
+commit path (every COW commit of LakeTable goes through the bucket fold
+below; merge-on-read commits go through make_bucket_delta_fold).
 
-The pure-JVM merge (LakeTable.merge) expresses the upsert as winners-agg
-+ semi-join + full-outer join + repartition: ~8 stages per micro-batch,
-and at micro-batch cadence the inter-stage barriers dominate wall time
+A join-based merge expresses the upsert as winners-agg + semi-join +
+full-outer join + repartition: ~8 stages per micro-batch, and at
+micro-batch cadence the inter-stage barriers dominate wall time
 (measured: ~2s of scheduling gaps per segment vs ~1.7s of work at 16
 cores). This module collapses the whole merge into TWO stages:
 
@@ -51,6 +53,8 @@ from ..operators.dedup import MIN_LSN_COL
 
 if TYPE_CHECKING:  # pragma: no cover
     from .table import ColumnSpec
+
+MERGE_MODES = ("lww", "insert_if_absent", "update_only")  # see make_bucket_fold
 
 MANIFEST_SCHEMA = (
     "bucket int, path string, n_rows long, n_upserts long, n_deletes long, "
@@ -120,13 +124,26 @@ def make_bucket_fold(
     op_col: str,
     lsn_col: str,
     bucket_col: str,
-    update_only: bool = False,
+    mode: str = "lww",
     precombined: bool = False,
 ):
     """Build the applyInPandas function for one micro-batch merge.
 
     Everything captured here is tiny metadata (column specs + file
     lists); the heavy inputs (batch rows, state files) stay distributed.
+
+    ``mode`` decides what the batch's LWW winner per key does:
+
+    - ``"lww"``: 'U' upserts (MERGE WHEN MATCHED UPDATE SET * / WHEN NOT
+      MATCHED INSERT *), 'D' deletes;
+    - ``"insert_if_absent"``: 'D' deletes; 'U' inserts only when the key
+      is absent from the bucket state, an existing row keeps its payload
+      (the reference's default MERGE ... ON CREATE SET,
+      src/etl/bgi_etl.py:99-115 — first writer wins);
+    - ``"update_only"``: 'D' deletes; 'U' patches only keys already in
+      the bucket state, absent keys are dropped, never inserted (MERGE
+      WHEN MATCHED UPDATE with no insert branch — the reference's
+      ``MATCH (e {primaryKey}) SET ...``, src/etl/ecomap_etl.py:22-30).
 
     ``precombined``: the changeset already went through
     operators.dedup.precombine_lww — at most one winner row per key per
@@ -160,20 +177,20 @@ def make_bucket_fold(
             b_min_lsn = int(pdf[lsn_col].min())
             b_max_lsn = int(pdf[lsn_col].max())
             # exact re-delivery dedup: co-location guarantees all copies of a
-            # (key, lsn) pair are in this group. The dropped count is exact
-            # and free here — it replaces the planning pass's doc_id-decoding
-            # approx_count_distinct (see ReplayRunner._plan fast mode).
+            # (key, lsn) pair are in this group, so the dropped count is
+            # exact and free here (ReplayRunner._plan never decodes doc_id).
             n_before = len(pdf)
             pdf = pdf.drop_duplicates(subset=[key, lsn_col])
             n_dups = n_before - len(pdf)
 
         state = read_bucket_state(bucket_files.get(bucket, []), schema_versions,
                                   current, root)
-        state_keys = None
+        sdf = None
         if state is not None and len(state):
-            sdf = state.to_pandas(types_mapper=None)
-            if update_only:
-                state_keys = set(sdf[key])
+            # integer columns holding nulls stay exact Python ints: the
+            # default float64 would round bigints above 2**53 each time
+            # the bucket is rewritten
+            sdf = state.to_pandas(integer_object_nulls=True)
             sdf[op_col] = "U"
             sdf[lsn_col] = -1
             pdf = pd.concat([sdf, pdf[names + [op_col, lsn_col]]], ignore_index=True)
@@ -185,10 +202,17 @@ def make_bucket_fold(
         win = pdf.loc[pdf.groupby(key, sort=False)[lsn_col].idxmax()]
         n_deletes_applied = int((win[op_col] == "D").sum())
         win = win[win[op_col] == "U"][names]
-        if update_only:
-            # matched-only patch: a winning upsert for a key NOT already
-            # in this bucket's state is dropped, never inserted
-            win = win[win[key].isin(state_keys)] if state_keys else win.iloc[0:0]
+        if mode != "lww" and sdf is not None:
+            # surviving keys already in state: every non-deleted state
+            # key is a winner (its own lsn=-1 row, or a batch upsert)
+            in_state = win[key].isin(sdf[key])
+            if mode == "update_only":
+                win = win[in_state]
+            else:  # insert_if_absent: existing rows keep their payload
+                win = pd.concat([sdf.loc[sdf[key].isin(win[key]), names],
+                                 win[~in_state]], ignore_index=True)
+        elif mode == "update_only":  # empty bucket: nothing to patch
+            win = win.iloc[0:0]
 
         bdir = os.path.join(root, stage_rel, f"{bucket_col}={bucket}")
         os.makedirs(bdir, exist_ok=True)
@@ -227,158 +251,6 @@ def make_bucket_fold(
     return fold
 
 
-def make_bucket_fold_arrow(
-    root: str,
-    stage_rel: str,
-    key: str,
-    current: list,
-    schema_versions: dict[int, list],
-    bucket_files: dict[int, list[dict]],
-    op_col: str,
-    lsn_col: str,
-    bucket_col: str,
-    update_only: bool = False,
-    precombined: bool = False,
-):
-    """Arrow-END-TO-END variant of :func:`make_bucket_fold` for Spark's
-    ``applyInArrow`` (pyspark >= 4.0): the batch arrives as a
-    ``pa.Table``, state is read as a ``pa.Table``, and LWW winner
-    selection is one stable sort + two boolean masks — the payload
-    columns (token arrays) are NEVER converted to pandas. The pandas
-    fold boxes every list value into a per-row numpy object (~2 extra
-    full copies of the state per merge plus per-row allocation); at
-    100 TB the fold is memory-bandwidth-bound, so those copies are the
-    sink's dominant avoidable cost. Semantics are identical (see
-    tests/test_lake.py::test_arrow_and_pandas_folds_equal):
-
-      sort (key asc, lsn desc, stable) ->
-      mask 1: first occurrence per (key, lsn)  == re-delivery dedup
-      mask 2: first occurrence per key         == max-lsn LWW winner
-      winners with op 'D' are dropped (counted), op 'U' written.
-    """
-    import pyarrow.compute as pc
-
-    names = [c.name for c in current]
-    out_pa_schema = arrow_schema(current)
-    combined_fields = list(out_pa_schema) + [
-        pa.field(op_col, pa.string()), pa.field(lsn_col, pa.int64()),
-    ]
-    combined_schema = pa.schema(combined_fields)
-
-    def _first_mask(arr: pa.ChunkedArray | pa.Array, n: int) -> np.ndarray:
-        """Boolean mask: True where row i differs from row i-1."""
-        neq = pc.not_equal(arr.slice(1), arr.slice(0, n - 1))
-        out = np.empty(n, dtype=bool)
-        out[0] = True
-        out[1:] = neq.to_numpy(zero_copy_only=False)
-        return out
-
-    def fold(t: pa.Table) -> pa.Table:
-        bucket = t.column(bucket_col)[0].as_py()
-        lsn_raw = t.column(lsn_col).cast(pa.int64())
-        if precombined:
-            # re-delivery dedup counters come from the runner's planning
-            # pass via lineage (approx, or exact with exact_counts=True;
-            # see the pandas fold above); only the per-bucket offset
-            # range is measured here
-            b_min_lsn = pc.min(t.column(MIN_LSN_COL)).as_py()
-            b_max_lsn = pc.max(lsn_raw).as_py()
-            pre_n_dups = 0
-        else:
-            b_min_lsn = pc.min(lsn_raw).as_py()
-            b_max_lsn = pc.max(lsn_raw).as_py()
-        batch = pa.Table.from_arrays(
-            [t.column(c.name).cast(arrow_type(c.type)) for c in current]
-            + [t.column(op_col).cast(pa.string()), lsn_raw],
-            schema=combined_schema,
-        )
-
-        state = read_bucket_state(bucket_files.get(bucket, []), schema_versions,
-                                  current, root)
-        n_state = 0
-        state_keys = None
-        if state is not None and len(state):
-            n_state = len(state)
-            # constant op='U' / lsn=-1 columns, built arrow-native
-            op_arr = pc.fill_null(pa.nulls(n_state, pa.string()), "U")
-            lsn_arr = pc.fill_null(pa.nulls(n_state, pa.int64()), -1)
-            state_t = pa.Table.from_arrays(
-                [state.column(c.name) for c in current] + [op_arr, lsn_arr],
-                schema=combined_schema,
-            )
-            if update_only:
-                state_keys = state.column(key).combine_chunks()
-            combined = pa.concat_tables([state_t, batch])
-        else:
-            combined = batch
-
-        n = len(combined)
-        idx = pc.sort_indices(
-            combined,
-            sort_keys=[(key, "ascending"), (lsn_col, "descending")],
-        )
-        srt = combined.take(idx)
-        k = srt.column(key).combine_chunks()
-        if n > 1 and not precombined:
-            pair_mask = _first_mask(k, n) | _first_mask(
-                srt.column(lsn_col).combine_chunks(), n)
-            dedup = srt.filter(pa.array(pair_mask))
-        else:
-            # precombined: at most one batch row per key PER MAP PARTITION;
-            # cross-partition survivors of the same key (incl. identical
-            # re-delivered winner copies) are resolved by the first-per-key
-            # winner mask below, so the pair-dedup pass is redundant
-            dedup = srt
-        # exact re-delivery count: state rows (unique keys, lsn=-1) never
-        # collide, so every dropped row is a duplicated (key, lsn) event
-        n_dups = pre_n_dups if precombined else n - len(dedup)
-        n2 = len(dedup)
-        k2 = dedup.column(key).combine_chunks()
-        winners = dedup.filter(pa.array(_first_mask(k2, n2))) if n2 > 1 else dedup
-
-        ops = winners.column(op_col)
-        n_deletes_applied = int(pc.sum(pc.equal(ops, "D")).as_py() or 0)
-        win = winners.filter(pc.equal(ops, "U"))
-        if update_only:
-            if state_keys is not None and len(win):
-                win = win.filter(pc.is_in(win.column(key), value_set=state_keys))
-            else:
-                win = win.slice(0, 0)
-        # precombined: APPLIED upserts (winner rows written) — distinct U
-        # events are uncountable post-collapse (see the pandas fold)
-        n_upserts = len(win) if precombined else int(
-            (pc.sum(pc.equal(dedup.column(op_col), "U")).as_py() or 0) - n_state
-        )
-
-        rel_path = None
-        if len(win):
-            bdir = os.path.join(root, stage_rel, f"{bucket_col}={bucket}")
-            os.makedirs(bdir, exist_ok=True)
-            final = os.path.join(bdir, "part-0.parquet")
-            tmp = final + ".inprogress"
-            out = pa.Table.from_arrays(
-                [win.column(nm) for nm in names], schema=out_pa_schema
-            )
-            pq.write_table(out, tmp, compression="snappy")
-            os.replace(tmp, final)
-            rel_path = os.path.join(stage_rel, f"{bucket_col}={bucket}",
-                                    "part-0.parquet")
-        return pa.table(
-            {
-                "bucket": pa.array([bucket], pa.int32()),
-                "path": pa.array([rel_path], pa.string()),
-                "n_rows": pa.array([len(win)], pa.int64()),
-                "n_upserts": pa.array([n_upserts], pa.int64()),
-                "n_deletes": pa.array([n_deletes_applied], pa.int64()),
-                "min_lsn": pa.array([b_min_lsn], pa.int64()),
-                "max_lsn": pa.array([b_max_lsn], pa.int64()),
-                "n_dups": pa.array([n_dups], pa.int64()),
-            }
-        )
-
-    return fold
-
-
 DELTA_LSN = "__lsn"
 DELTA_SEQ = "__seq"
 
@@ -405,7 +277,7 @@ def make_bucket_delta_fold(
     Paimon LSM): ingest cost is O(batch) writes with zero read
     amplification, at the price of a merge step on read until
     compaction. The reference has no analog (every load rewrites
-    through Neo4j MERGE); the COW fold (make_bucket_fold*) remains the
+    through Neo4j MERGE); the COW fold (make_bucket_fold) remains the
     read-optimized default.
 
     Delta files carry ``__op``/``__lsn``/``__seq`` alongside the

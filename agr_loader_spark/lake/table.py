@@ -28,11 +28,13 @@ Scale design (the part that must hold at 10^10 events / 100 TB):
 - state is bucketed by ``pmod(xxhash64(key), n_buckets)``; a micro-batch
   rewrites ONLY the buckets its keys hash into (copy-on-write at bucket
   granularity), so merge cost is O(touched state) not O(total state);
-- the anti-join that drops overwritten rows joins per-bucket data that is
-  already co-partitioned by the same hash function — on a real cluster
-  with Iceberg bucket transforms this is a storage-partitioned join with
-  no shuffle of the big side; here Spark shuffles both sides but each
-  bucket's data is bounded (state_size / n_buckets);
+- every copy-on-write commit (``merge``, ``merge_arrow``,
+  ``delete_where``, ``compact``) is one bucket fold (lake/arrow_merge.py):
+  the changeset is shuffled by the same hash that lays out the table, and
+  each fold task reads its bucket's state directly, resolves LWW and
+  writes the new bucket file — the state side never shuffles, like an
+  Iceberg storage-partitioned join, and each bucket's data is bounded
+  (state_size / n_buckets);
 - schema evolution is metadata-only (field-id mapping, no data rewrite),
   exactly like Iceberg: old files are read through a projection that
   renames/casts/nulls by field id.
@@ -57,6 +59,7 @@ from ..schema import ddl_to_type
 
 OP_COL = "__op"
 BUCKET_COL = "__bucket"
+MERGE_LSN = "__merge_lsn"  # constant lsn of a one-row-per-key changeset
 LINEAGE_LOG = "_lineage.jsonl"
 
 
@@ -366,124 +369,22 @@ class LakeTable:
 
         ``changes`` must have one row per key (the LWW reduce guarantees
         this — Iceberg likewise rejects duplicate source keys in MERGE)
-        with columns = current table columns + ``__op`` in {'U','D'}.
-        'U' upserts the row (insert-or-overwrite = MERGE WHEN MATCHED
-        UPDATE SET * / WHEN NOT MATCHED INSERT *); 'D' deletes the key.
-
-        Only buckets containing changed keys are rewritten; all other
-        buckets carry forward by manifest reference. The merge itself is
-        ONE full-outer join between the touched state and the changeset
-        (the changeset subtree is referenced exactly once, so its
-        dedup/LWW shuffles run once, with op metrics collected by
-        observe() during the same action — 2 Spark jobs per micro-batch
-        including the caller's stats pass). ``touched_buckets`` lets the
-        caller supply the bucket set from a stats pass it already ran.
+        with columns = current table columns + ``__op`` in {'U','D'};
+        ``mode`` routes the rows as in arrow_merge.make_bucket_fold.
+        The changeset commits through the bucket fold (merge_arrow)
+        under one constant lsn: with one row per key no two batch rows
+        compete, and every batch row outranks its key's state row
+        (lsn -1), so the constant is exact. Only buckets containing
+        changed keys are rewritten; ``touched_buckets`` lets the caller
+        supply the bucket set from a stats pass it already ran.
         """
-        from pyspark.sql import Observation
-
-        if mode not in ("lww", "insert_if_absent", "update_only"):
-            raise ValueError(f"unknown merge mode {mode!r}")
-        if epoch_key in self.applied_epochs():
-            return {"skipped": True, "epoch_key": epoch_key, "snapshot_id": self.snapshot_id}
-
-        cur = self.columns()
-        changes = changes.select(
-            *[F.col(c.name).cast(c.type).alias(c.name) for c in cur], F.col(OP_COL)
+        return self.merge_arrow(
+            changes.withColumn(MERGE_LSN, F.lit(0).cast("long")), epoch_key,
+            lsn_col=MERGE_LSN, lineage=lineage,
+            touched_buckets=touched_buckets, mode=mode,
         )
-        if touched_buckets is None:
-            touched_buckets = [
-                r[0]
-                for r in changes.select(
-                    self._bucket_expr(F.col(self.key)).alias("b")
-                ).distinct().collect()
-            ]
-        touched = sorted(int(b) for b in touched_buckets)
-        if not touched:
-            return self._commit_noop(epoch_key, lineage)
 
-        obs = Observation()
-        changes = changes.observe(
-            obs,
-            F.sum(F.when(F.col(OP_COL) == "U", 1).otherwise(0)).alias("n_upserts"),
-            F.sum(F.when(F.col(OP_COL) == "D", 1).otherwise(0)).alias("n_deletes"),
-        )
-        s = changes.select(
-            F.col(self.key).alias("__s_key"),
-            F.col(OP_COL),
-            *[F.col(c.name).alias(f"__s_{c.name}") for c in cur if c.name != self.key],
-        )
-        existing = self.read(buckets=touched)
-        joined = existing.join(s, existing[self.key] == s["__s_key"], "full_outer")
-        # row survives unless its latest op is a delete; in 'lww' mode a
-        # changed row takes the source payload (MERGE WHEN MATCHED UPDATE
-        # SET *, src/etl/allele_etl.py:142-144); in 'insert_if_absent'
-        # mode the existing payload wins (the reference's default
-        # MERGE ... ON CREATE SET, src/etl/bgi_etl.py:99-115 — first
-        # writer wins, later re-sends are no-ops)
-        if mode == "insert_if_absent":
-            def pick(c):
-                return (F.when(F.col(self.key).isNotNull(), F.col(c.name))
-                        .otherwise(F.col(f"__s_{c.name}")).alias(c.name))
-        else:
-            def pick(c):
-                return (F.when(F.col(OP_COL).isNull(), F.col(c.name))
-                        .otherwise(F.col(f"__s_{c.name}")).alias(c.name))
-        keep = F.col(OP_COL).isNull() | (F.col(OP_COL) == "U")
-        if mode == "update_only":
-            # matched-only patch (MERGE WHEN MATCHED UPDATE, no insert
-            # branch — the reference's `MATCH (e {primaryKey}) SET ...`,
-            # src/etl/ecomap_etl.py:22-30): source rows whose key is
-            # absent from the table are dropped, not inserted
-            keep = keep & F.col(self.key).isNotNull()
-        merged = joined.filter(keep).select(
-            F.coalesce(F.col(self.key), F.col("__s_key")).alias(self.key),
-            *[pick(c) for c in cur if c.name != self.key],
-        ).select(*[c.name for c in cur])
-        new_state = merged.withColumn(BUCKET_COL, self._bucket_expr(F.col(self.key)))
-
-        new_sid = self.snapshot_id + 1
-        stage_rel = os.path.join("data", str(new_sid))
-        stage = os.path.join(self.root, stage_rel)
-        # one write task per touched bucket: bounded files, co-located keys
-        new_state.repartition(max(len(touched), 1), F.col(BUCKET_COL)).write.partitionBy(
-            BUCKET_COL
-        ).mode("overwrite").parquet(stage)
-        op_stats = obs.get
-
-        sv = self._m["schema_version"]
-        new_buckets = dict(self._m["buckets"])
-        for b in touched:
-            bdir = os.path.join(stage, f"{BUCKET_COL}={b}")
-            files = []
-            if os.path.isdir(bdir):
-                files = [
-                    {
-                        "path": os.path.join(stage_rel, f"{BUCKET_COL}={b}", fn),
-                        "schema_version": sv,
-                    }
-                    for fn in sorted(os.listdir(bdir))
-                    if fn.endswith(".parquet")
-                ]
-            new_buckets[str(b)] = files
-
-        lin = _resolve_lineage(lineage)
-        lin.update(
-            {
-                "epoch_key": epoch_key,
-                "snapshot_id": new_sid,
-                "n_upserts": int(op_stats.get("n_upserts") or 0),
-                "n_deletes": int(op_stats.get("n_deletes") or 0),
-                "buckets_touched": touched,
-            }
-        )
-        m = self._child_manifest(new_sid, "merge", epoch_key)
-        m["buckets"] = new_buckets
-        self._append_lineage(lin)
-        self._commit(m)
-        self._m = m
-        return {"skipped": False, **lin}
-
-    # per-fold-task row budget: keeps the applyInPandas task's pandas
+    # per-fold-task row budget: keeps the fold task's pandas
     # working set bounded (~a few hundred MB) independent of commit
     # interval, so large segments amortize the per-commit floor WITHOUT
     # spilling small executors (the 12M-event-epoch spill in
@@ -622,17 +523,20 @@ class LakeTable:
         lineage: dict | None = None,
         touched_buckets: Sequence[int] | None = None,
         prepared: bool = False,
-        mode: str = "lww",  # "lww" | "update_only"
+        mode: str = "lww",  # "lww" | "insert_if_absent" | "update_only"
         replace_state: bool = False,
         precombined: bool = False,
     ) -> dict:
-        """Two-stage Arrow-native merge (see lake/arrow_merge.py).
+        """Two-stage Arrow-native merge (see lake/arrow_merge.py) — the
+        one copy-on-write commit path.
 
         ``changes`` carries current columns + ``__op`` + ``lsn_col`` and
         need NOT be pre-reduced: LWW (incl. re-delivery dedup) happens
         inside the bucket fold, so the caller's whole pipeline is
-        scan -> project -> one shuffle -> fold/write. ``mode=
-        'update_only'`` patches matched keys only (no insert branch).
+        scan -> project -> one shuffle -> fold/write. ``mode`` routes
+        the per-key winner (arrow_merge.make_bucket_fold):
+        ``'insert_if_absent'`` keeps existing rows' payloads,
+        ``'update_only'`` patches matched keys only (no insert branch).
         ``replace_state=True`` ignores the buckets' existing files and
         rewrites each touched bucket purely from ``changes`` — the
         compaction path, where ``changes`` IS the resolved state.
@@ -641,13 +545,9 @@ class LakeTable:
         counter columns) — requires ``prepared=True``; the fold reads
         the counters instead of re-deduping.
         """
-        from .arrow_merge import (
-            MANIFEST_SCHEMA,
-            make_bucket_fold,
-            make_bucket_fold_arrow,
-        )
+        from .arrow_merge import MANIFEST_SCHEMA, MERGE_MODES, make_bucket_fold
 
-        if mode not in ("lww", "update_only"):
+        if mode not in MERGE_MODES:
             raise ValueError(f"unknown merge mode {mode!r}")
         if precombined and not prepared:
             raise ValueError("precombined changesets must arrive prepared "
@@ -666,25 +566,20 @@ class LakeTable:
         touched = sorted(int(b) for b in touched_buckets)
         if not touched:
             return self._commit_noop(epoch_key, lineage)
+        if not replace_state and any(
+            fe.get("kind") == "delta"
+            for b in touched for fe in self._m["buckets"].get(str(b), [])
+        ):
+            # the fold reads base files only; a merge-on-read delta would
+            # be taken for live state (tombstones included)
+            raise ValueError("touched buckets carry merge-on-read delta files: "
+                             "compact() before a copy-on-write commit")
         if not prepared:
             changes = self.prepare_changes(changes, lsn_col, len(touched))
 
         new_sid = self.snapshot_id + 1
         stage_rel = os.path.join("data", str(new_sid))
-        # fold engine: pandas (applyInPandas) is the measured default —
-        # the applyInArrow variant (make_bucket_fold_arrow, payload never
-        # converted to pandas) proved state+manifest-identical but ~5%
-        # SLOWER on clean 48M-event replay legs (BENCH/ab_fold_*.jsonl:
-        # pandas 153.6/168.8 s vs arrow 179.5/160.7 s, 4-exec) and at
-        # parity in-process: bucket fold cost is dominated by parquet
-        # IO, not by the pandas conversion. Kept selectable for
-        # future shapes where payload boxing dominates (very wide or
-        # deeply nested rows).
-        use_arrow_fold = (
-            os.environ.get("SPARK_GRAFT_FOLD", "pandas").lower() == "arrow"
-        )
-        make_fold = make_bucket_fold_arrow if use_arrow_fold else make_bucket_fold
-        fold = make_fold(
+        fold = make_bucket_fold(
             root=self.root,
             stage_rel=stage_rel,
             key=self.key,
@@ -701,19 +596,14 @@ class LakeTable:
             op_col=OP_COL,
             lsn_col=lsn_col,
             bucket_col=BUCKET_COL,
-            update_only=(mode == "update_only"),
+            mode=mode,
             precombined=precombined,
         )
         # the prepared partitioning satisfies the groupBy's clustered
         # distribution (hash(bucket) directly, or hash(__pk) leading the
         # grouping for the balanced layout), so no second shuffle here.
         group_cols = (["__pk"] if "__pk" in changes.columns else []) + [BUCKET_COL]
-        grouped = changes.groupBy(*group_cols)
-        folded = (
-            grouped.applyInArrow(fold, schema=MANIFEST_SCHEMA)
-            if use_arrow_fold
-            else grouped.applyInPandas(fold, schema=MANIFEST_SCHEMA)
-        )
+        folded = changes.groupBy(*group_cols).applyInPandas(fold, schema=MANIFEST_SCHEMA)
         _tj = time.monotonic()
         manifests = folded.collect()
         sec_job = round(time.monotonic() - _tj, 4)
@@ -756,7 +646,8 @@ class LakeTable:
                 "n_upserts": n_upserts if exact_u is None else int(exact_u),
                 "n_deletes": n_deletes,
                 # actual touched set (buckets that received rows), not the
-                # caller's declared superset — fast-plan passes all buckets
+                # caller's declared superset — the replay runner declares
+                # all buckets
                 "buckets_touched": sorted(int(r["bucket"]) for r in manifests),
                 "per_bucket_offsets": per_bucket,
             }
@@ -950,8 +841,9 @@ class LakeTable:
 
         Three-valued logic: rows where the predicate evaluates NULL are
         KEPT (only predicate IS TRUE deletes). Scale: one stats pass
-        finds the buckets containing matches; only those buckets are
-        rewritten (copy-on-write at bucket granularity, like merge).
+        finds the buckets containing matches; the matching keys then
+        commit as 'D' rows through the bucket fold (merge), so only
+        those buckets are rewritten.
         """
         if epoch_key in self.applied_epochs():
             return {"skipped": True, "epoch_key": epoch_key, "snapshot_id": self.snapshot_id}
@@ -959,53 +851,14 @@ class LakeTable:
         hit = F.coalesce(cond, F.lit(False))
 
         state = self.read().withColumn(BUCKET_COL, self._bucket_expr(F.col(self.key)))
-        per_bucket = (
-            state.filter(hit).groupBy(BUCKET_COL).count().collect()
+        touched = sorted(
+            int(r[BUCKET_COL])
+            for r in state.filter(hit).select(BUCKET_COL).distinct().collect()
         )
-        touched = sorted(int(r[BUCKET_COL]) for r in per_bucket)
-        n_deletes = sum(int(r["count"]) for r in per_bucket)
         if not touched:
             return self._commit_noop(epoch_key, lineage)
-
-        cur = self.columns()
-        keep = (
-            self.read(buckets=touched)
-            .filter(~hit)
-            .select(*[c.name for c in cur])
-            .withColumn(BUCKET_COL, self._bucket_expr(F.col(self.key)))
-        )
-        new_sid = self.snapshot_id + 1
-        stage_rel = os.path.join("data", str(new_sid))
-        stage = os.path.join(self.root, stage_rel)
-        keep.repartition(max(len(touched), 1), F.col(BUCKET_COL)).write.partitionBy(
-            BUCKET_COL
-        ).mode("overwrite").parquet(stage)
-
-        sv = self._m["schema_version"]
-        new_buckets = dict(self._m["buckets"])
-        for b in touched:
-            bdir = os.path.join(stage, f"{BUCKET_COL}={b}")
-            files = []
-            if os.path.isdir(bdir):
-                files = [
-                    {"path": os.path.join(stage_rel, f"{BUCKET_COL}={b}", fn),
-                     "schema_version": sv}
-                    for fn in sorted(os.listdir(bdir))
-                    if fn.endswith(".parquet")
-                ]
-            new_buckets[str(b)] = files
-
-        lin = _resolve_lineage(lineage)
-        lin.update({
-            "epoch_key": epoch_key, "snapshot_id": new_sid,
-            "n_upserts": 0, "n_deletes": n_deletes, "buckets_touched": touched,
-        })
-        m = self._child_manifest(new_sid, "delete-where", epoch_key)
-        m["buckets"] = new_buckets
-        self._append_lineage(lin)
-        self._commit(m)
-        self._m = m
-        return {"skipped": False, **lin}
+        doomed = self.read(buckets=touched).filter(hit).withColumn(OP_COL, F.lit("D"))
+        return self.merge(doomed, epoch_key, lineage=lineage, touched_buckets=touched)
 
     def _commit_noop(self, epoch_key: str, lineage: dict | None) -> dict:
         new_sid = self.snapshot_id + 1

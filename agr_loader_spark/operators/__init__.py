@@ -1,7 +1,5 @@
 from .dedup import (  # noqa: F401
     lww_reduce,
-    lww_reduce_pandas,
-    lww_reduce_salted,
     lww_reduce_window,
 )
 from .fk_guard import fk_guard  # noqa: F401

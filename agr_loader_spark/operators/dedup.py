@@ -13,9 +13,11 @@ Reference semantics being re-expressed (SURVEY.md A3/K3/K4):
   here exact (doc_id, event_lsn) re-deliveries are identical rows, so
   they collapse in the final dedup.
 
-Four implementations, all vectorized (no per-row Python, per the north
-rule). Null keys: rows with a null ``key`` are dropped (the caller
-routes schema events before LWW).
+One production reducer plus a readable reference, both vectorized (no
+per-row Python, per the north rule). Null keys: rows with a null ``key``
+are dropped (the caller routes schema events before LWW). The replay
+runner itself calls neither: its LWW happens inside the bucket fold
+(lake/arrow_merge.py), optionally after ``precombine_lww`` below.
 
 - ``lww_reduce`` (DEFAULT, production path) — two-phase local/global
   reduce that never sorts or aggregates the payload:
@@ -31,14 +33,9 @@ routes schema events before LWW).
   (key, max_lsn) pairs ever converge on one reducer. ~10x faster than
   the struct-aggregation variants on token-array payloads (measured:
   1.9s vs 18.4s on a 2M-event segment, local[32]).
-- ``lww_reduce_salted`` — explicit salted repartitioning + two-phase
-  max_by(struct) merge-apply (local per (key, salt), then global per
-  key). The BASELINE.json-named strategy, kept selectable and tested;
-  payload rides through the aggregation buffers, so prefer the default.
-- ``lww_reduce_pandas`` — the salted two-phase as grouped
-  ``applyInPandas`` Arrow UDFs (north-rule parity implementation).
-- ``lww_reduce_window`` — naive row_number() window; the readable spec.
-  NOT skew-safe: a hot key sorts all its rows in one partition.
+- ``lww_reduce_window`` — naive row_number() window; the readable spec
+  that tests compare ``lww_reduce`` against. NOT skew-safe: a hot key
+  sorts all its rows in one partition.
 """
 
 from __future__ import annotations
@@ -60,7 +57,6 @@ def lww_reduce(
     df: DataFrame,
     key: str = "doc_id",
     order_col: str = "event_lsn",
-    salt_buckets: int = 16,  # unused here; kept for signature parity
 ) -> DataFrame:
     """Keep, per key, the full row of the max-``order_col`` event.
 
@@ -75,31 +71,6 @@ def lww_reduce(
     )
 
 
-def lww_reduce_salted(
-    df: DataFrame,
-    key: str = "doc_id",
-    order_col: str = "event_lsn",
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Explicit salted two-phase merge-apply with max_by(struct).
-
-    Phase 1 reduces (key, salt) locally (Spark additionally pre-combines
-    map-side), phase 2 reduces per key; the salt bounds any single
-    reducer's group size under hot keys — the engine analog of the
-    reference's randomized provider-pair scheduling
-    (src/etl/orthology_etl.py:197-225).
-    """
-    cols = df.columns
-    payload = F.struct(*cols)
-    salted = df.withColumn("__salt", F.pmod(F.xxhash64(F.col(order_col)), F.lit(salt_buckets)))
-    local = salted.groupBy(key, "__salt").agg(
-        F.max_by(payload, F.col(order_col)).alias("__row"),
-        F.max(order_col).alias("__lsn"),
-    )
-    merged = local.groupBy(key).agg(F.max_by("__row", F.col("__lsn")).alias("__row"))
-    return merged.select("__row.*")
-
-
 def lww_reduce_window(df: DataFrame, key: str = "doc_id", order_col: str = "event_lsn") -> DataFrame:
     w = Window.partitionBy(key).orderBy(F.col(order_col).desc())
     return (
@@ -109,36 +80,13 @@ def lww_reduce_window(df: DataFrame, key: str = "doc_id", order_col: str = "even
     )
 
 
-def lww_reduce_pandas(
-    df: DataFrame,
-    key: str = "doc_id",
-    order_col: str = "event_lsn",
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Salted two-phase LWW as grouped Arrow/pandas UDFs (applyInPandas).
-
-    Semantics identical to ``lww_reduce``; each phase receives the whole
-    (key[, salt]) group as one pandas frame and keeps idxmax(order_col).
-    """
-    schema = df.schema
-
-    def keep_last(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pdf.loc[[pdf[order_col].idxmax()]]
-
-    salted = df.withColumn("__salt", F.pmod(F.xxhash64(F.col(order_col)), F.lit(salt_buckets)))
-    local = salted.groupBy(key, "__salt").applyInPandas(
-        lambda pdf: keep_last(pdf), schema=salted.schema
-    ).drop("__salt")
-    return local.groupBy(key).applyInPandas(keep_last, schema=schema)
-
-
 def dedup_exact(df: DataFrame, cols: Iterable[str] | None = None) -> DataFrame:
     """Plain distinct-by-columns (SURVEY.md A2, dropDuplicates)."""
     return df.dropDuplicates(list(cols) if cols else None)
 
 
 #: counter column emitted by :func:`precombine_lww`, consumed by the
-#: bucket folds (lake/arrow_merge.py) and stripped by the prefetch
+#: bucket fold (lake/arrow_merge.py) and stripped by the prefetch
 #: schema check (streaming/runner.py) — every consumer references these
 #: names, so adding a counter column is a one-line change here
 MIN_LSN_COL = "__min_lsn"

@@ -15,39 +15,22 @@ from pyspark.sql import SparkSession
 
 
 def _loopback_tcp_workaround() -> None:
-    """Best-effort sandbox fix for a loopback-TCP lost-wakeup under BBR.
+    """Opt-in fix for a loopback-TCP lost-wakeup under BBR.
 
-    The 2026-08-18 sandbox kernel (6.18.5-fc) defaults to BBR congestion
-    control; twice in this environment a large python<->JVM Arrow stream
-    wedged forever mid-task with the signature: one segment marked lost
-    ON LOOPBACK, retransmits backed off to the 120 s RTO ceiling at
-    cwnd=1 while the peer dup-acked them (ss: ``lost:1 retrans:1/16
-    rto:120000 backoff:11 dsack_dups:3``), python worker stuck in
-    tcp_sendmsg, JVM reader in epoll_wait. Switching to cubic made the
-    identical workload complete reliably. Real clusters terminate these
-    streams on real NICs and tune CC fleet-wide, and a fleet that chose
-    BBR on purpose must never have a library silently flip it — so the
-    guard is SCOPED IN CODE, not just in this docstring: it applies only
-    when the running kernel release matches the known-bad sandbox kernel
-    FAMILY (6.18*-fc*: first diagnosed on 6.18.5-fc; the 2026-08-20
-    sandbox image updated to 6.18.44-fc-v21, which reverted to BBR and
-    reproduced the same bimodal multi-executor stalls — see
-    BENCH/BASELINE.md "ROUND 5: 2→8"), unless explicitly forced with
-    SPARK_GRAFT_LOOPBACK_CC_FIX=1 (0 disables even in the sandbox). It
-    is a no-op without procfs write access either way.
+    On a 6.18.x-fc VM kernel that defaults to BBR congestion control, a
+    large python<->JVM Arrow stream twice wedged forever mid-task with
+    the signature: one segment marked lost ON LOOPBACK, retransmits
+    backed off to the 120 s RTO ceiling at cwnd=1 while the peer
+    dup-acked them (ss: ``lost:1 retrans:1/16 rto:120000 backoff:11
+    dsack_dups:3``), python worker stuck in tcp_sendmsg, JVM reader in
+    epoll_wait; switching to cubic made the identical workload complete
+    reliably (BENCH/BASELINE.md "ROUND 5: 2→8"). The fix rewrites a
+    HOST-WIDE sysctl, so library code never does it by default: it runs
+    only when SPARK_GRAFT_LOOPBACK_CC_FIX=1, and is a no-op without
+    procfs write access or when the host does not run BBR.
     """
-    force = os.environ.get("SPARK_GRAFT_LOOPBACK_CC_FIX")
-    if force == "0":
+    if os.environ.get("SPARK_GRAFT_LOOPBACK_CC_FIX") != "1":
         return
-    if force != "1":
-        import platform
-        import re
-        rel = platform.release()
-        # anchored to the 6.18.x-fc family exactly: startswith("6.18")
-        # would also catch hypothetical 6.180+/6.181 releases, and a bare
-        # "-fc" substring could appear in any custom localversion
-        if re.match(r"6\.18\.\d+-fc", rel) is None:
-            return
     path = "/proc/sys/net/ipv4/tcp_congestion_control"
     try:
         with open(path) as f:
@@ -59,8 +42,8 @@ def _loopback_tcp_workaround() -> None:
         import sys
         sys.stderr.write(
             "agr_loader_spark: loopback-TCP workaround rewrote host "
-            "tcp_congestion_control bbr -> cubic (known-bad sandbox "
-            "kernel family; SPARK_GRAFT_LOOPBACK_CC_FIX=0 disables)\n"
+            "tcp_congestion_control bbr -> cubic "
+            "(SPARK_GRAFT_LOOPBACK_CC_FIX=1)\n"
         )
     except OSError:
         pass
@@ -134,7 +117,7 @@ def get_spark(
         # 4-exec replay wall 27s -> 33s on the scaling input)
         # scan-task granularity, env-overridable per workload: the
         # few-core-executor replay measures best at 32m (4x1-exec leg
-        # 87s -> 66s, 1-exec unchanged — tools/run_scaling_r2.sh sets
+        # 87s -> 66s, 1-exec unchanged — the round-2 scaling legs set
         # it), but the default stays at Spark's 128m: the wide local[32]
         # analytics queries measure WORSE with small splits (warm
         # ngram_jaccard at sf0.1: 9s @128m vs 28s @32m — the extra scan

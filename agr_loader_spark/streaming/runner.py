@@ -8,8 +8,8 @@ stack (SURVEY.md §3.1): ordered ``etl_groups`` with hard barriers
 (src/transactors/csv_transactor.py:14-57) — all collapsed into a
 sequential epoch loop where each micro-batch is
 
-    read epoch -> dedup (doc_id, event_lsn) -> LWW reduce (salted
-    two-phase) -> plan changeset -> MERGE commit (exactly-once)
+    read epoch -> plan changeset -> shuffle by bucket -> bucket fold
+    (re-delivery dedup + LWW + MERGE commit, exactly-once)
 
 and job boundaries are the barriers. Epochs containing schema-change
 events are split at each S event's lsn so evolution applies at exactly
@@ -39,8 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lake.table import OP_COL, LakeTable
-from ..operators.dedup import (MIN_LSN_COL, lww_reduce, lww_reduce_pandas,
-                               lww_reduce_salted)
+from ..operators.dedup import MIN_LSN_COL
 from ..plans.merge import plan_changeset
 
 
@@ -51,13 +50,10 @@ class ReplayRunner:
         table: LakeTable,
         source_path: str | None = None,
         source_df: DataFrame | None = None,
-        salt_buckets: int = 16,
-        use_pandas_lww: bool = False,
-        use_salted_lww: bool = False,
-        sink: str = "arrow",  # "arrow" (2-stage state-colocated COW) | "jvm" | "delta" (write-optimized MOR)
+        sink: str = "arrow",  # "arrow" (2-stage state-colocated COW) | "delta" (write-optimized MOR)
         precombine: bool | None = None,  # arrow sink only: map-LOCAL LWW combine (operators/dedup.py:precombine_lww, Arrow-vectorized mapInArrow — NOT a groupBy agg; see its docstring for why) collapses each map partition to one winner row per key BEFORE the bucket shuffle, cutting shuffled/folded payload bytes by the feed's update multiplicity (zipf: most event volume is LWW losers) with zero added exchanges and bounded per-task memory. Exact dedup counters move to the narrow planning pass (_plan). None (default) = on for the arrow sink, and bench.py re-verifies the claim every run with an uncombined probe rep rather than freezing it here (the r4 JVM-agg combine's "faster everywhere" claim was falsified by exactly such a probe; BENCH/BASELINE.md round-4 precombine section).
         exact_counts: bool = False,  # precombine mode only: the map-local combine erases re-delivery multiplicity before the fold, so exact n_upserts / n_duplicates_dropped need a two-level distinct-lsn aggregation in the planning pass — a full extra pass over the segment (~60 core-s per 34M events, measured round 4) paid for a metrics counter. Default OFF: lineage carries n_upserts_approx / n_duplicates_dropped_approx from approx_count_distinct folded into the same narrow planning agg (no extra shuffle, one expression), plus the fold-exact applied-upsert count as n_upserts. Turn on for audits where distinct-event counts must be exact. Uncombined runs always have exact counters — the fold measures them for free.
-        pipeline: bool | str = False,  # async fold overlap: prefetch the next segment's scan+shuffle (schema-aware) under the current fold. True/False, or "auto": measure both regimes on THIS run's early segments (ABBA: sync on applied segments 1+4, one overlap cycle on 2+3, the empty-table segment 0 excluded) and lock in the faster (the overlap win flips sign across hosts/topologies — r3 measured it +53% wall, the r4 host measured it faster; a frozen flag is wrong somewhere, so decide from live per-event rates instead)
+        pipeline: bool = False,  # async fold overlap: prefetch the next segment's scan+shuffle (schema-aware) under the current fold (the overlap win flips sign across hosts/topologies — r3 measured it +53% wall, the r4 host measured it faster; bench.py re-measures it with a probe rep every run)
         compact_at_end: bool = True,  # delta sink only: collapse MOR deltas to base files after the last segment (inside run(), so measured walls are apples-to-apples with the COW sink)
         prune_applied: bool = True,  # resume: skip fully-applied epochs BEFORE the planning scan (via the epoch_final lineage stamp), so resuming a 10^10-event replay near its end re-scans only the tail, not the whole log. Relies on the binlog invariant that an epoch partition is immutable once its final segment committed (events are lsn-total-ordered, so appending to an already-applied epoch would be out-of-order anyway). Set False for a source that violates it.
     ):
@@ -67,14 +63,11 @@ class ReplayRunner:
         self.table = table
         self.source_path = source_path
         self.source_df = source_df
-        self.salt_buckets = salt_buckets
-        self.use_pandas_lww = use_pandas_lww
-        self.use_salted_lww = use_salted_lww
-        if sink not in ("arrow", "jvm", "delta"):
+        if sink not in ("arrow", "delta"):
             raise ValueError(f"unknown sink {sink!r}")
         self.sink = sink
-        if pipeline not in (True, False, "auto"):
-            raise ValueError(f"pipeline must be True/False/'auto', got {pipeline!r}")
+        if pipeline not in (True, False):
+            raise ValueError(f"pipeline must be True/False, got {pipeline!r}")
         self.pipeline = pipeline
         if precombine is None:
             precombine = sink == "arrow"
@@ -123,25 +116,16 @@ class ReplayRunner:
     # ------------------------------------------------------------------ replay
     def _plan(self, epochs: list[int] | None):
         """ONE planning pass for the whole replay: collect the (rare)
-        schema events, then compute per-segment stats — offsets, counts,
-        and (full mode only) dup estimate + touched buckets — in a
-        single grouped aggregation over the log. The replay loop then
-        runs exactly one Spark job per micro-batch (the merge write);
-        nothing else touches the cluster.
+        schema events, then compute per-segment stats — offsets and
+        counts — in a single grouped aggregation over the log. The replay
+        loop then runs exactly one Spark job per micro-batch (the merge
+        write); nothing else touches the cluster.
 
-        Fast mode (the default for the fold sinks): the stats scan
-        touches ONLY (epoch, event_lsn, op) — fixed-width ints plus a
-        1-char string. The full mode additionally decodes every doc_id
-        (the widest hot column after the payload) to hash out a dup
-        estimate and a touched-bucket set; both are superseded on the
-        fold sinks, which count dedup EXACTLY inside the bucket fold
-        and record the actual touched set from the fold manifests. At
-        10^10 events the doc_id decode is the planning pass's dominant
-        cost, so fast mode roughly halves it; the jvm join-merge sink
-        still needs the touched set up front and keeps the full scan."""
-        fast = self.sink in ("arrow", "delta") and (
-            os.environ.get("SPARK_GRAFT_FAST_PLAN", "1") != "0"
-        )
+        The stats scan touches ONLY (epoch, event_lsn, op) — fixed-width
+        ints plus a 1-char string. doc_id (the widest hot column after
+        the payload) is never decoded: the bucket fold counts dedup
+        EXACTLY and the fold manifests record the actual touched-bucket
+        set, so at 10^10 events the planning pass stays narrow."""
         ev = self._events()
         if epochs is not None:
             ev = ev.filter(F.col("epoch").isin(epochs))
@@ -189,8 +173,6 @@ class ReplayRunner:
                 F.max(
                     F.when(F.col("op") == "D", 1).otherwise(0)
                 ).alias("is_d"),  # copies of an lsn are identical events
-                *([] if fast else
-                  [F.min(self.table._bucket_expr(F.col("doc_id"))).alias("b1")]),
             )
             aggs = [
                 F.sum("copies").alias("n_events"),
@@ -201,8 +183,6 @@ class ReplayRunner:
                 # non-delete becomes an upsert
                 F.sum(F.when(F.col("is_d") == 0, 1).otherwise(0)).alias("n_unique_u"),
             ]
-            if not fast:
-                aggs.append(F.collect_set("b1").alias("buckets"))
             stats_rows = lvl1.groupBy("epoch", "seg").agg(*aggs).collect()
         else:
             aggs = [
@@ -217,7 +197,7 @@ class ReplayRunner:
                 # distinct-lsn needs no doc_id decode — these two extra
                 # expressions ride the same narrow segment-stats partial
                 # aggregation (HLL sketch buffers, no extra shuffle),
-                # compatible with fast-plan's 3-column scan.
+                # compatible with the planning pass's 3-column scan.
                 # rsd 0.02 default: the dup estimate is n_events -
                 # distinct_estimate, so its absolute error is
                 # rsd * n_events — at typical re-delivery rates (<1%)
@@ -239,15 +219,6 @@ class ReplayRunner:
                         F.when(F.col("op") != "D", F.col("event_lsn")), rsd
                     ).alias("n_unique_u_approx"),
                 ]
-            if not fast:
-                aggs += [
-                    # metrics-only: approx avoids a full (doc, lsn) dedup
-                    # shuffle; hash the pair instead of building a string
-                    F.approx_count_distinct(
-                        F.xxhash64("doc_id", "event_lsn")
-                    ).alias("n_unique"),
-                    F.collect_set(self.table._bucket_expr(F.col("doc_id"))).alias("buckets"),
-                ]
             stats_rows = data.groupBy("epoch", seg_expr.alias("seg")).agg(*aggs).collect()
         exact = self.precombine and self.exact_counts
         stats = {
@@ -255,7 +226,7 @@ class ReplayRunner:
                 "n_events": r["n_events"],
                 "min_lsn": r["min_lsn"],
                 "max_lsn": r["max_lsn"],
-                "n_unique": r["n_unique"] if (exact or not fast) else None,
+                "n_unique": r["n_unique"] if exact else None,
                 "n_unique_u": r["n_unique_u"] if exact else None,
                 "n_unique_approx": (
                     r["n_unique_approx"] if self.precombine and not exact else None
@@ -263,7 +234,6 @@ class ReplayRunner:
                 "n_unique_u_approx": (
                     r["n_unique_u_approx"] if self.precombine and not exact else None
                 ),
-                "buckets": None if fast else r["buckets"],
             }
             for r in stats_rows
         }
@@ -286,14 +256,6 @@ class ReplayRunner:
                     seg += 1
                     lo = b
         return ops
-
-    def _segment_events(self, epoch: int, lo, hi) -> DataFrame:
-        cond = (F.col("epoch") == epoch) & (F.col("op") != "S")
-        if lo is not None:
-            cond = cond & (F.col("event_lsn") > lo)
-        if hi is not None:
-            cond = cond & (F.col("event_lsn") < hi)
-        return self._events().filter(cond)
 
     def _changeset_base(self, columns=None) -> DataFrame:
         """The segment-independent prefix of the arrow-sink plan —
@@ -349,26 +311,21 @@ class ReplayRunner:
         return self.table.balanced_fold_repartition(seg, n_touched, n_rows)
 
     def _touched(self, st) -> list[int]:
-        """Touched-bucket set for a segment's stats row: the exact set in
-        full-plan mode, ALL buckets in fast mode (the fold manifests then
-        record the actual set; an undeclared bucket with no rows forms no
-        group, so its state files carry forward untouched either way)."""
-        if st is None:
-            return []
-        if st.get("buckets") is not None:
-            return list(st["buckets"])
-        return list(range(self.table.n_buckets))
+        """Touched-bucket set declared for a segment's stats row: ALL
+        buckets (the fold manifests then record the actual set; an
+        undeclared bucket with no rows forms no group, so its state files
+        carry forward untouched), none for a segment without events."""
+        return [] if st is None else list(range(self.table.n_buckets))
 
     def _n_touched(self, st) -> int:
-        """Fold-granularity estimate for a segment: len(_touched), but in
-        fast-plan mode capped by the segment's row count — a sparse
-        segment cannot touch more buckets than it has rows, and without
-        the cap every tiny segment would get n_buckets fold partitions
-        (mostly empty Arrow round-trips)."""
-        touched = self._touched(st)
-        if st is not None and st.get("buckets") is None and st.get("n_events"):
-            return min(len(touched), int(st["n_events"]))
-        return len(touched)
+        """Fold-granularity estimate for a segment: len(_touched) capped
+        by the segment's row count — a sparse segment cannot touch more
+        buckets than it has rows, and without the cap every tiny segment
+        would get n_buckets fold partitions (mostly empty Arrow
+        round-trips)."""
+        if st is None:
+            return 0
+        return min(self.table.n_buckets, int(st["n_events"]))
 
     @staticmethod
     def _future_cols(cols, sc) -> list:
@@ -485,38 +442,10 @@ class ReplayRunner:
         all_metrics: list[dict] = pruned_records
         committed = 0
         futures: dict[tuple[int, int], cf.Future] = {}
-        pool = cf.ThreadPoolExecutor(max_workers=1) if (
-            self.pipeline and self.sink in ("arrow", "delta")
-        ) else None
-        # pipeline="auto": probe both regimes on the replay's own early
-        # segments, then lock the faster. Probe design (ABBA, seg-0
-        # excluded): the FIRST applied data segment folds into an empty
-        # table and is structurally faster per event (no state read —
-        # tools/diag_seg0.py quantifies it), so it belongs to NEITHER
-        # bucket; segments 1 and 4 apply synchronously (A), segments 2-3
-        # run one full overlap cycle (segment 2 pays the concurrent
-        # prefetch, segment 3 consumes it) (B). Bracketing sync around
-        # overlap cancels the monotone state-growth drift that a
-        # sync-first/overlap-second split would attribute to the regime.
-        # At production commit intervals (>=100M events/segment) the
-        # probe is a vanishing prefix; on short logs the decision barely
-        # matters. overlap_on: None = still probing. A sink with no
-        # prefetch pool (jvm) has nothing to probe: auto resolves off.
-        auto = self.pipeline == "auto" and pool is not None
-        if self.pipeline == "auto":
-            overlap_on: bool | None = None if pool is not None else False
-        else:
-            overlap_on = bool(self.pipeline)
-        probe = {"sync": [0.0, 0], "overlap": [0.0, 0]}
-        applied_data = 0
+        pool = cf.ThreadPoolExecutor(max_workers=1) if self.pipeline else None
         try:
             for i, op in enumerate(ops):
-                prefetch_now = pool is not None and op[0] == "data" and (
-                    overlap_on is True
-                    or (overlap_on is None and applied_data == 2
-                        and f"{op[1]}:{op[2]}" not in self.table.applied_epochs())
-                )
-                if prefetch_now:
+                if pool is not None and op[0] == "data":
                     # prefetch the NEXT data segment, planning it under
                     # the schema the table will have once any schema
                     # events in between commit (simulated metadata-only)
@@ -534,11 +463,6 @@ class ReplayRunner:
                         break
                 if op[0] == "data":
                     _, epoch, seg, lo, hi = op
-                    # timer starts BEFORE the prefetch join: if the
-                    # prefetched scan+shuffle outlasts the previous fold,
-                    # the residual fut.result() wait is real wall time the
-                    # overlap regime must be charged for in the probe
-                    _ta = time.monotonic()
                     fut = futures.pop((epoch, seg), None)
                     prepared = None
                     if fut is not None:
@@ -561,44 +485,10 @@ class ReplayRunner:
                         epoch, seg, lo, hi, stats.get((epoch, seg)), prepared,
                         epoch_final=(last_data_seg.get(epoch) == seg),
                     )
-                    _ta = time.monotonic() - _ta
                 else:
                     _, epoch, seg, row = op
                     m = self._apply_schema_event(epoch, seg, row)
-                    _ta = None
                 all_metrics.append(m)
-                if auto and _ta is not None and not m.get("skipped"):
-                    if overlap_on is None:
-                        slot = applied_data  # index of THIS applied segment
-                        b = (probe["sync"] if slot in (1, 4)
-                             else probe["overlap"] if slot in (2, 3)
-                             else None)  # slot 0: empty-table build, excluded
-                        if b is not None:
-                            b[0] += _ta
-                            b[1] += int(m.get("n_events") or 0)
-                    applied_data += 1
-                    if overlap_on is None and applied_data >= 5:
-                        (ts, es), (to, eo) = probe["sync"], probe["overlap"]
-                        rate_s = es / ts if ts > 0 else 0.0
-                        rate_o = eo / to if to > 0 else 0.0
-                        overlap_on = rate_o > rate_s
-                        # full probe inputs in the record so the decision
-                        # is auditable from _metrics.jsonl alone: which
-                        # applied segments fed which bucket (ABBA, slot 0
-                        # excluded), their summed walls and event counts
-                        pol = {"operation": "pipeline_policy",
-                               "overlap_on": overlap_on,
-                               "rate_sync_eps": round(rate_s, 1),
-                               "rate_overlap_eps": round(rate_o, 1),
-                               "probe_slots": {"sync": [1, 4],
-                                               "overlap": [2, 3],
-                                               "excluded": [0]},
-                               "sync_wall_s": round(ts, 4),
-                               "sync_events": es,
-                               "overlap_wall_s": round(to, 4),
-                               "overlap_events": eo}
-                        self._emit(pol)
-                        all_metrics.append(pol)
                 if not m.get("skipped"):
                     committed += 1
                 if stop_after is not None and committed >= stop_after:
@@ -668,66 +558,34 @@ class ReplayRunner:
             lineage["n_duplicates_dropped_approx"] = max(
                 0, n_events - int(stats["n_unique_approx"])
             )
-        elif stats is not None and stats.get("n_unique") is not None:
-            # full-plan mode only; fold sinks record the EXACT count as
-            # n_duplicates_dropped from the fold manifests instead
-            lineage["n_duplicates_dropped_approx"] = max(
-                0, n_events - int(stats["n_unique"])
-            )
         touched = self._touched(stats)
+        if prepared is None:
+            prepared = self._segment_prepared(epoch, lo, hi,
+                                              self._n_touched(stats),
+                                              n_events or None)
         if self.sink == "delta":
-            # MOR: same prepared stage-1; the fold appends delta files
-            # without ever reading bucket state
-            if prepared is None:
-                prepared = self._segment_prepared(epoch, lo, hi,
-                                                  self._n_touched(stats),
-                                                  n_events or None)
+            # MOR: the fold appends delta files without ever reading
+            # bucket state
             result = self.table.merge_delta(
                 prepared, epoch_key=epoch_key, lsn_col="event_lsn",
                 lineage=lineage, touched_buckets=touched, prepared=True,
             )
-            if hasattr(prepared, "unpersist"):
-                prepared.unpersist()
-        elif self.sink == "arrow":
+        else:
             # LWW + re-delivery dedup happen inside the bucket fold; the
             # JVM side is scan -> project -> one shuffle
-            if prepared is not None:
-                result = self.table.merge_arrow(
-                    prepared, epoch_key=epoch_key, lsn_col="event_lsn",
-                    lineage=lineage, touched_buckets=touched, prepared=True,
-                    precombined=self.precombine,
-                )
-                prepared.unpersist()
-            else:
-                seg_df = self._segment_prepared(epoch, lo, hi,
-                                                self._n_touched(stats),
-                                                n_events or None)
-                result = self.table.merge_arrow(
-                    seg_df, epoch_key=epoch_key, lsn_col="event_lsn",
-                    lineage=lineage, touched_buckets=touched, prepared=True,
-                    precombined=self.precombine,
-                )
-        else:
-            events = self._segment_events(epoch, lo, hi)
-            if self.use_pandas_lww:
-                reducer = lww_reduce_pandas
-            elif self.use_salted_lww:
-                reducer = lww_reduce_salted
-            else:
-                reducer = lww_reduce  # semi-join path; collapses re-deliveries
-            latest = reducer(events, key="doc_id", order_col="event_lsn",
-                             salt_buckets=self.salt_buckets)
-            changes = plan_changeset(latest, self.table)
-            result = self.table.merge(
-                changes, epoch_key=epoch_key, lineage=lineage,
-                touched_buckets=touched,
+            result = self.table.merge_arrow(
+                prepared, epoch_key=epoch_key, lsn_col="event_lsn",
+                lineage=lineage, touched_buckets=touched, prepared=True,
+                precombined=self.precombine,
             )
+        prepared.unpersist()
         result["seconds"] = round(time.monotonic() - t0, 4)
         self._emit(result)
         return result
 
     def _apply_schema_event(self, epoch: int, seg: int, row) -> dict:
         epoch_key = f"{epoch}:{seg}"
+        t0 = time.monotonic()
         sc = row["schema_change"]
         kind = sc["kind"]
         if kind == "add":
@@ -742,7 +600,8 @@ class ReplayRunner:
         else:
             raise ValueError(f"unknown schema change kind {kind!r}")
         r = dict(r)
-        r.update({"operation": f"evolve:{kind}", "at_lsn": int(row["event_lsn"])})
+        r.update({"operation": f"evolve:{kind}", "at_lsn": int(row["event_lsn"]),
+                  "seconds": round(time.monotonic() - t0, 4)})
         if not r.get("skipped"):
             self._emit(r)
         return r

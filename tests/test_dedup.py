@@ -1,12 +1,11 @@
-"""LWW reduce: the three implementations agree, incl. under hot-key skew."""
+"""LWW reduce: the production reducer matches the readable window
+reference, incl. under hot-key skew."""
 
 import pyspark.sql.functions as F
 
 from agr_loader_spark.operators.dedup import (
     dedup_redelivery,
     lww_reduce,
-    lww_reduce_pandas,
-    lww_reduce_salted,
     lww_reduce_window,
 )
 
@@ -24,21 +23,20 @@ def _frame(spark):
 
 
 def test_lww_implementations_agree(spark):
+    """lww_reduce against its oracle, the row_number() window spec."""
     df = _frame(spark)
-    outs = [
-        {r["doc_id"]: (r["event_lsn"], r["tokens"]) for r in impl(df).collect()}
-        for impl in (lww_reduce, lww_reduce_salted, lww_reduce_window, lww_reduce_pandas)
+    got, want = [
+        {r["doc_id"]: (r["event_lsn"], r["tokens"], r["v"]) for r in impl(df).collect()}
+        for impl in (lww_reduce, lww_reduce_window)
     ]
-    assert outs[0] == outs[1] == outs[2] == outs[3]
-    assert outs[0]["hot"] == (499, [499])
-    assert len(outs[0]) == 51
+    assert got == want
+    assert got["hot"] == (499, [499], 499 % 7)
+    assert len(got) == 51
 
 
 def test_lww_output_schema_matches_input(spark):
     df = _frame(spark)
     assert lww_reduce(df).columns == df.columns
-    assert lww_reduce_salted(df).columns == df.columns
-    assert lww_reduce_pandas(df).columns == df.columns
 
 
 def test_dedup_redelivery(spark):
@@ -57,6 +55,3 @@ def test_lww_is_jvm_side(spark):
     plan = lww_reduce(_frame(spark))._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "partial_max" in plan and "LeftSemi" in plan
-    # salted variant: max_by struct with partial combine
-    plan2 = lww_reduce_salted(_frame(spark))._jdf.queryExecution().executedPlan().toString()
-    assert "partial_max_by" in plan2 and "BatchEvalPython" not in plan2

@@ -103,6 +103,19 @@ def test_insert_if_absent_mode(spark, tmproot):
     assert {r["doc_id"] for r in t.read().collect()} == {"b"}
 
 
+def test_merge_keeps_bigint_exact_next_to_nulls(spark, tmproot):
+    """A bucket rewrite must not round a stored bigint above 2**53 when
+    another stored row of the bucket holds a null in that column."""
+    t = LakeTable.create(spark, tmproot + "/big", [("k", "string", None), ("v", "bigint", None)],
+                         key="k", n_buckets=1)
+    big = 2**53 + 1
+    schema = "k string, v bigint, __op string"
+    t.merge(spark.createDataFrame([("b", None, "U")], schema), "0:0")
+    t.merge(spark.createDataFrame([("a", big, "U")], schema), "1:0")
+    t.merge(spark.createDataFrame([("c", 5, "U")], schema), "2:0")
+    assert {r["k"]: r["v"] for r in t.read().collect()} == {"a": big, "b": None, "c": 5}
+
+
 def test_time_travel_and_lineage_lookup(spark, tmproot):
     t = _mk(spark, tmproot)
     t.merge(_changes(spark, [("a", [1], 1, "FB", "U")]), "0:0")
@@ -146,8 +159,9 @@ def test_drop_column_metadata_only(spark, tmproot):
     assert t.read().collect()[0]["source"] is None
 
 
-def test_update_only_mode_jvm_sink(spark, tmproot):
-    """K6: matched-only patch — absent keys must NOT be inserted."""
+def test_update_only_mode_merge(spark, tmproot):
+    """K6 through merge(): matched-only patch — absent keys must NOT be
+    inserted."""
     t = _mk(spark, tmproot)
     t.merge(_changes(spark, [("a", [1], 1, "FB", "U"), ("b", [2], 1, "WB", "U")]), "0:0")
     r = t.merge(
@@ -185,6 +199,36 @@ def test_update_only_mode_arrow_sink(spark, tmproot):
     assert rows["a"]["tokens"] == [9]
     with pytest.raises(ValueError, match="unknown merge mode"):
         t.merge_arrow(_ch([]), "2:0", lsn_col="event_lsn", mode="nope")
+
+
+def test_insert_if_absent_mode_arrow_fold(spark, tmproot):
+    """K3 in the bucket fold itself: the batch's LWW winner per key
+    decides — 'D' deletes, 'U' inserts only an absent key, an existing
+    row keeps its payload."""
+    t = _mk(spark, tmproot)
+
+    def _ch(rows):
+        return spark.createDataFrame(
+            rows,
+            "doc_id string, tokens array<int>, n_tok int, source string,"
+            " __op string, event_lsn long",
+        )
+
+    t.merge_arrow(_ch([("a", [1], 1, "FB", "U", 1), ("b", [2], 1, "WB", "U", 2)]),
+                  "0:0", lsn_col="event_lsn", mode="insert_if_absent")
+    r = t.merge_arrow(
+        _ch([("a", [999], 1, "WB", "U", 10),         # re-send of an existing key
+             ("c", [5], 1, "MGI", "U", 11),          # several events, one key:
+             ("c", [7, 7], 2, "MGI", "U", 13),       # the max-lsn winner inserts
+             ("c", [6], 1, "MGI", "U", 12),
+             ("b", None, None, None, "D", 14),       # delete of an existing key
+             ("d", [8], 1, "ZFIN", "U", 15),         # inserted, then deleted
+             ("d", None, None, None, "D", 16)]),      # in the same batch
+        "1:0", lsn_col="event_lsn", mode="insert_if_absent",
+    )
+    assert not r["skipped"]
+    rows = {x["doc_id"]: (x["tokens"], x["n_tok"], x["source"]) for x in t.read().collect()}
+    assert rows == {"a": ([1], 1, "FB"), "c": ([7, 7], 2, "MGI")}
 
 
 def test_delete_where_predicate(spark, tmproot):
@@ -234,11 +278,11 @@ def test_audit_changes_dry_run(spark, tmproot):
     assert spark.read.parquet(tmproot + "/audit").count() == 4
 
 
-def test_arrow_and_pandas_folds_equal(spark, tmproot, monkeypatch):
-    """The applyInArrow fold and the pandas fold must produce identical
-    table state and manifests for the same change stream: re-delivered
-    (key, lsn) duplicates, interleaved deletes, winner-by-max-lsn,
-    empty buckets, and a schema-evolved old-schema state file."""
+def test_arrow_and_pandas_folds_equal(spark, tmproot):
+    """The Arrow-native merge path's bucket fold (pandas inside) against
+    hand-derived state and lineage for a change stream with re-delivered
+    (key, lsn) duplicates, interleaved deletes, winner-by-max-lsn, empty
+    buckets, and a schema-evolved old-schema state file."""
 
     def _ch(rows):
         return spark.createDataFrame(
@@ -257,35 +301,36 @@ def test_arrow_and_pandas_folds_equal(spark, tmproot, monkeypatch):
          ("d", [6, 6], 2, "ZFIN", "U", 12)],
     ]
 
-    states, metas = [], []
-    for engine in ("arrow", "pandas"):
-        monkeypatch.setenv("SPARK_GRAFT_FOLD", engine)
-        t = LakeTable.create(spark, f"{tmproot}/{engine}", COLS,
-                             key="doc_id", n_buckets=4)
-        m = []
-        for i, rows in enumerate(batches):
-            m.append(t.merge_arrow(_ch(rows), f"{i}:0", lsn_col="event_lsn"))
-        # schema evolution between merges: old-schema file projection
-        t.add_column("lang", "string", src_field="lang")
-        m.append(t.merge_arrow(
-            spark.createDataFrame(
-                [("c", [4, 4], 2, "MGI", "en", "U", 20)],
-                "doc_id string, tokens array<int>, n_tok int, source string,"
-                " lang string, __op string, event_lsn long",
-            ),
-            "2:0", lsn_col="event_lsn",
-        ))
-        states.append({r["doc_id"]: r.asDict() for r in t.read().collect()})
-        metas.append([{k: v for k, v in r.items()
-                       if k not in ("snapshot_id", "sec_job")}
-                      for r in m])
+    t = LakeTable.create(spark, f"{tmproot}/t", COLS, key="doc_id", n_buckets=4)
+    m = [t.merge_arrow(_ch(rows), f"{i}:0", lsn_col="event_lsn")
+         for i, rows in enumerate(batches)]
+    # schema evolution between merges: old-schema file projection
+    t.add_column("lang", "string", src_field="lang")
+    m.append(t.merge_arrow(
+        spark.createDataFrame(
+            [("c", [4, 4], 2, "MGI", "en", "U", 20)],
+            "doc_id string, tokens array<int>, n_tok int, source string,"
+            " lang string, __op string, event_lsn long",
+        ),
+        "2:0", lsn_col="event_lsn",
+    ))
+    state = {r["doc_id"]: r.asDict() for r in t.read().collect()}
 
-    assert states[0] == states[1]
-    assert states[0]["a"]["tokens"] == [9]          # max-lsn wins, dup collapsed
-    assert "b" not in states[0]                      # delete applied
-    assert states[0]["d"]["lang"] is None            # evolved col null-filled
-    assert states[0]["c"]["lang"] == "en"
-    assert metas[0] == metas[1]                      # upsert/delete/lineage counts
+    assert set(state) == {"a", "c", "d"}
+    assert state["a"]["tokens"] == [9]          # max-lsn wins, dup collapsed
+    assert "b" not in state                      # delete applied
+    assert state["d"]["lang"] is None            # evolved col null-filled
+    assert state["c"]["lang"] == "en" and state["c"]["tokens"] == [4, 4]
+    # upsert/delete/dedup counts and offset lineage per commit
+    assert [(r["n_upserts"], r["n_deletes"], r["n_duplicates_dropped"]) for r in m] \
+        == [(3, 0, 0), (3, 1, 1), (1, 0, 0)]
+    for r in m:
+        offs = r["per_bucket_offsets"]
+        assert set(offs) == {str(b) for b in r["buckets_touched"]}
+        assert min(o["min_lsn"] for o in offs.values()) == \
+            {"0:0": 1, "1:0": 5, "2:0": 20}[r["epoch_key"]]
+        assert max(o["max_lsn"] for o in offs.values()) == \
+            {"0:0": 3, "1:0": 12, "2:0": 20}[r["epoch_key"]]
 
 
 def test_evolve_lineage_in_side_log_and_commit_order(spark, tmproot):

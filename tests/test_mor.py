@@ -3,6 +3,7 @@ compaction, exactly-once, schema evolution, and end-to-end runner
 equivalence with the COW sink."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from agr_loader_spark.lake.table import LakeTable
 
@@ -91,9 +92,16 @@ def test_delta_all_tombstoned_bucket_empties_on_compact(spark, tmproot):
     t.merge_delta(_ch(spark, [("a", None, None, None, "D", 2)]), "1:0",
                   lsn_col="event_lsn")
     assert t.read().count() == 0
+    # the copy-on-write fold reads base files only: it refuses buckets
+    # that still carry delta files instead of taking tombstones as rows
+    upsert_b = _ch(spark, [("b", [2], 1, "FB", "U", 3)]).drop("event_lsn")
+    with pytest.raises(ValueError, match="compact"):
+        t.merge(upsert_b, "2:0")
     t.compact()
     assert t.read().count() == 0
     assert all(files == [] for files in t._m["buckets"].values())
+    t.merge(upsert_b, "2:0")
+    assert [r["doc_id"] for r in t.read().collect()] == ["b"]
 
 
 def test_delta_schema_evolution_projection(spark, tmproot):

@@ -34,27 +34,6 @@ def test_fk_guard_uses_broadcast_semi_join(spark):
     assert "LeftSemi" in plan and "Broadcast" in plan
 
 
-def test_replay_merge_plan_has_no_python_in_jvm_sink(spark, tmproot):
-    from agr_loader_spark.lake.table import LakeTable
-    from agr_loader_spark.operators.dedup import lww_reduce
-    from agr_loader_spark.plans.merge import plan_changeset
-    from agr_loader_spark.schema import TOKENS_MERGE_KEY, TOKENS_TABLE_COLUMNS
-    from agr_loader_spark.generator import generate_binlog
-
-    t = LakeTable.create(spark, tmproot + "/t", TOKENS_TABLE_COLUMNS,
-                         key=TOKENS_MERGE_KEY, n_buckets=8)
-    ev = generate_binlog(spark, n_events=1000, n_docs=100, epoch_size=1000,
-                         seed=1, with_schema_changes=False)
-    changes = plan_changeset(lww_reduce(ev.filter(F.col("op") != "S")), t)
-    plan = _plan(changes)
-    # the generator itself is Arrow (mapInPandas; referenced once per side
-    # of the semi join); downstream of it the dedup/LWW/changeset pipeline
-    # must add NO Python eval nodes of any kind
-    assert plan.count("ArrowEvalPython") + plan.count("BatchEvalPython") == 0
-    assert "FlatMapGroupsInPandas" not in plan
-    assert 1 <= plan.count("MapInPandas") <= 2  # only the source generator
-
-
 def test_epoch_partition_pruning(spark, tmproot):
     from agr_loader_spark.generator import generate_binlog
 

@@ -1,6 +1,7 @@
 """Property-based replay equivalence: hypothesis-generated event logs
 (adversarial op mixes, duplicate lsns, delete/insert churn, empty
-epochs) must fold to exactly the scalar-oracle state."""
+epochs) must fold to exactly the scalar-oracle state, on the copy-on-write
+sink and on the merge-on-read sink."""
 
 import shutil
 import tempfile
@@ -51,7 +52,7 @@ def _oracle(log):
     return state
 
 
-@pytest.mark.parametrize("sink", ["arrow", "jvm"])
+@pytest.mark.parametrize("sink", ["arrow", "delta"])
 @settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(log=log_st, dup_mask=dup_mask_st, epoch_size=st.sampled_from([3, 7, 50]))

@@ -15,7 +15,7 @@ def _table(spark, root, n_buckets=8):
 
 def test_extreme_hot_key_replay_correct(spark, tmproot):
     """One doc_id carries ~60% of all events (far past the F2 dial);
-    every LWW path and both sinks must still produce the exact fold."""
+    both sinks must still produce the exact scalar LWW fold."""
     log = generate_binlog(spark, n_events=8000, n_docs=5, zipf_s=2.0,
                           epoch_size=2000, seed=13, with_schema_changes=False)
     top_share = (
@@ -23,19 +23,19 @@ def test_extreme_hot_key_replay_correct(spark, tmproot):
     )
     assert top_share > 0.5  # genuinely pathological
 
-    results = {}
-    for name, kwargs in {
-        "arrow": dict(sink="arrow"),
-        "jvm_semi": dict(sink="jvm"),
-        "jvm_salted": dict(sink="jvm", use_salted_lww=True),
-    }.items():
-        t = _table(spark, f"{tmproot}/{name}")
-        ReplayRunner(spark, t, source_df=log, **kwargs).run()
-        results[name] = {
-            r["doc_id"]: (r["n_tok"], list(r["tokens"])) for r in t.read().collect()
-        }
-    assert results["arrow"] == results["jvm_semi"] == results["jvm_salted"]
-    assert len(results["arrow"]) <= 5
+    # oracle: replay the log one event at a time in lsn order
+    want = {}
+    for r in sorted(log.collect(), key=lambda r: r["event_lsn"]):
+        if r["op"] == "D":
+            want.pop(r["doc_id"], None)
+        else:
+            want[r["doc_id"]] = (r["n_tok"], list(r["tokens"]))
+    assert 0 < len(want) <= 5
+    for sink in ("arrow", "delta"):
+        t = _table(spark, f"{tmproot}/{sink}")
+        ReplayRunner(spark, t, source_df=log, sink=sink).run()
+        got = {r["doc_id"]: (r["n_tok"], list(r["tokens"])) for r in t.read().collect()}
+        assert got == want, sink
 
 
 def test_expire_snapshots(spark, tmproot):

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Per-segment N-vs-4N decomposition from preserved replay metrics.
 
-run_scaling_v2.py copies each leg's ``_metrics.jsonl`` into
+The round-3 scaling campaign copied each leg's ``_metrics.jsonl`` into
 BENCH/segmetrics_r3v2/rep{N}_{e}exec.jsonl. This pairs them up and
 reports, per data segment: wall on each leg, per-segment parallel
 efficiency, and the residual (wall minus the sum of segment seconds =

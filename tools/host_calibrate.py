@@ -75,7 +75,7 @@ def calibrate() -> dict:
     # The old >=0.9 gate would keep the campaign closed on an idle host.
     # The compute ratio now only rejects catastrophic contention; the
     # authoritative clean/dirty decision stays with the IN-LEG monitors
-    # (steal, busy, bandwidth probe) in tools/run_scaling_v2.py, which
+    # (steal, busy, bandwidth probe) in tools/run_scaling_v3.py, which
     # integrate over whole legs.
     return {"t1": round(one, 2), "t4": round(four, 2),
             "quiet_ratio": round(ratio, 3),

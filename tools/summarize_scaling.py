@@ -1,4 +1,4 @@
-"""Summarize a scaling jsonl (tools/run_scaling_final.sh output):
+"""Summarize a scaling jsonl (BENCH/scaling_*.jsonl):
 per-config medians and the N->4N efficiency. Usage:
 
     python tools/summarize_scaling.py BENCH/scaling_final.jsonl
@@ -11,7 +11,7 @@ import sys
 
 def main(path: str) -> int:
     rows = [json.loads(l) for l in open(path) if l.strip()]
-    # v2 (run_scaling_v2.py) emits per-leg records with a `clean` noise
+    # the v2/v3 protocols emit per-leg records with a `clean` noise
     # verdict plus one `pair` record per accepted clean pair; the
     # protocol statistic there is the median of clean-pair efficiencies
     pairs = [r for r in rows if "pair" in r]
