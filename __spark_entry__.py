@@ -90,7 +90,7 @@ def q_cdc_precombine_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cdc_mor_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same final-state semantics as cdc_lww_snapshot, but materialized
     END-TO-END through the write-optimized merge-on-read sink
-    (lake/arrow_merge.py:make_bucket_delta_fold): the event log is
+    (lake/arrow_merge.py:make_bucket_fold, delta mode): the event log is
     split into three lsn-ordered micro-batches, each committed with
     LakeTable.merge_delta (bucket state never read during ingest,
     deletes as tombstones), the deltas compacted back to base files,

@@ -70,6 +70,25 @@ def _resolve_lineage(lineage: dict | None) -> dict:
     return {k: (v() if callable(v) else v) for k, v in (lineage or {}).items()}
 
 
+def _fold_manifests(rows: list) -> list:
+    """The fold's manifest rows, checked to name each bucket once: two
+    rows for one bucket mean the changeset reached the fold without its
+    bucket partitioning, and the second file would silently replace
+    the first."""
+    buckets = [int(r["bucket"]) for r in rows]
+    if len(set(buckets)) != len(buckets):
+        raise RuntimeError("bucket fold saw a bucket in more than one partition: "
+                           "the changeset must be prepared (prepare_changes)")
+    return rows
+
+
+def _phase_sums(manifests: list) -> dict:
+    """Sum the fold's per-bucket phase columns for the commit record."""
+    from .arrow_merge import PHASE_COLS
+
+    return {c: round(sum(r[c] for r in manifests), 4) for c in PHASE_COLS}
+
+
 @dataclass
 class ColumnSpec:
     id: int
@@ -373,8 +392,8 @@ class LakeTable:
         ``mode`` routes the rows as in arrow_merge.make_bucket_fold.
         The changeset commits through the bucket fold (merge_arrow)
         under one constant lsn: with one row per key no two batch rows
-        compete, and every batch row outranks its key's state row
-        (lsn -1), so the constant is exact. Only buckets containing
+        compete, and every batch row outranks its key's state row, so
+        the constant is exact. Only buckets containing
         changed keys are rewritten; ``touched_buckets`` lets the caller
         supply the bucket set from a stats pass it already ran.
         """
@@ -384,7 +403,7 @@ class LakeTable:
             touched_buckets=touched_buckets, mode=mode,
         )
 
-    # per-fold-task row budget: keeps the fold task's pandas
+    # per-fold-task row budget: keeps the fold task's Arrow
     # working set bounded (~a few hundred MB) independent of commit
     # interval, so large segments amortize the per-commit floor WITHOUT
     # spilling small executors (the 12M-event-epoch spill in
@@ -491,11 +510,7 @@ class LakeTable:
         if salts is None:  # probe exhausted: plain bucket-hash placement
             return df.repartition(p, F.col(BUCKET_COL))
         by_bucket = F.array(*[F.lit(salts[b % p]) for b in range(self.n_buckets)])
-        # __pk is kept as a COLUMN and later leads the fold's groupBy:
-        # HashPartitioning([__pk]) then satisfies ClusteredDistribution(
-        # [__pk, bucket]) — same one-shuffle plan, balanced placement.
-        return df.withColumn("__pk", F.element_at(by_bucket, F.col(BUCKET_COL) + 1)) \
-                 .repartition(p, F.col("__pk"))
+        return df.repartition(p, F.element_at(by_bucket, F.col(BUCKET_COL) + 1))
 
     def prepare_changes(self, changes: DataFrame, lsn_col: str, n_touched: int,
                         n_rows: int | None = None) -> DataFrame:
@@ -599,13 +614,12 @@ class LakeTable:
             mode=mode,
             precombined=precombined,
         )
-        # the prepared partitioning satisfies the groupBy's clustered
-        # distribution (hash(bucket) directly, or hash(__pk) leading the
-        # grouping for the balanced layout), so no second shuffle here.
-        group_cols = (["__pk"] if "__pk" in changes.columns else []) + [BUCKET_COL]
-        folded = changes.groupBy(*group_cols).applyInPandas(fold, schema=MANIFEST_SCHEMA)
+        # the prepared partitioning puts every row of a bucket in one
+        # partition (hash of the bucket or of its balanced salt), so the
+        # fold is a narrow map: no second shuffle here.
+        folded = changes.mapInArrow(fold, MANIFEST_SCHEMA)
         _tj = time.monotonic()
-        manifests = folded.collect()
+        manifests = _fold_manifests(folded.collect())
         sec_job = round(time.monotonic() - _tj, 4)
 
         sv = self._m["schema_version"]
@@ -668,8 +682,10 @@ class LakeTable:
         self._m = m
         # sec_job isolates the Spark job wall from the driver turn around
         # it (plan build + manifest bookkeeping) — the per-commit fixed
-        # floor decomposition in BENCH/BASELINE.md reads these fields
-        return {"skipped": False, "sec_job": sec_job, **lin}
+        # floor decomposition in BENCH/BASELINE.md reads these fields;
+        # the fold's phase sums split the job's Python time
+        return {"skipped": False, "sec_job": sec_job,
+                **_phase_sums(manifests), **lin}
 
     def merge_delta(
         self,
@@ -681,14 +697,14 @@ class LakeTable:
         prepared: bool = False,
     ) -> dict:
         """Write-optimized MERGE-ON-READ commit (Hudi-MOR / Paimon-LSM
-        analog; see arrow_merge.make_bucket_delta_fold): the micro-batch
+        analog; see arrow_merge.make_bucket_fold's delta mode): the micro-batch
         is LWW-reduced within itself and APPENDED as per-bucket delta
         files — existing state is never read, so ingest cost is
         O(batch) with zero read amplification and the sink scales as
         pure writes. read() resolves LWW across base+deltas by
         (__lsn, __seq); compact() collapses buckets back to base files.
         Same exactly-once manifest commit as merge_arrow."""
-        from .arrow_merge import MANIFEST_SCHEMA, make_bucket_delta_fold
+        from .arrow_merge import MANIFEST_SCHEMA, make_bucket_fold
 
         if epoch_key in self.applied_epochs():
             return {"skipped": True, "epoch_key": epoch_key,
@@ -709,16 +725,14 @@ class LakeTable:
 
         new_sid = self.snapshot_id + 1
         stage_rel = os.path.join("data", str(new_sid))
-        fold = make_bucket_delta_fold(
+        fold = make_bucket_fold(
             root=self.root, stage_rel=stage_rel, key=self.key, current=cur,
-            op_col=OP_COL, lsn_col=lsn_col, bucket_col=BUCKET_COL, seq=new_sid,
+            schema_versions={}, bucket_files={}, op_col=OP_COL,
+            lsn_col=lsn_col, bucket_col=BUCKET_COL, mode="delta", seq=new_sid,
         )
-        group_cols = (["__pk"] if "__pk" in changes.columns else []) + [BUCKET_COL]
-        manifests = (
-            changes.groupBy(*group_cols)
-            .applyInPandas(fold, schema=MANIFEST_SCHEMA)
-            .collect()
-        )
+        _tj = time.monotonic()
+        manifests = _fold_manifests(changes.mapInArrow(fold, MANIFEST_SCHEMA).collect())
+        sec_job = round(time.monotonic() - _tj, 4)
 
         sv = self._m["schema_version"]
         new_buckets = dict(self._m["buckets"])
@@ -754,7 +768,8 @@ class LakeTable:
         self._append_lineage(lin)
         self._commit(m)
         self._m = m
-        return {"skipped": False, **lin}
+        return {"skipped": False, "sec_job": sec_job,
+                **_phase_sums(manifests), **lin}
 
     def compact(self, buckets: Sequence[int] | None = None,
                 epoch_key: str | None = None) -> dict:

@@ -148,12 +148,15 @@ def precombine_lww(
     import pyarrow as pa
     from pyspark.sql.types import LongType, StructField, StructType
 
+    from ..zipcache import keep_zip_directory_cache
+
     # NOTE: StructType.add mutates in place — never call it on df.schema
     out_schema = StructType(
         list(df.schema.fields) + [StructField(MIN_LSN_COL, LongType())]
     )
 
     def _combine(batches):
+        keep_zip_directory_cache()
         batches = list(batches)
         if not batches:
             return

@@ -45,6 +45,8 @@ from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 from pyspark.sql.functions import pandas_udf
 
+from ..zipcache import keep_zip_directory_cache
+
 
 # ------------------------------------------------------------------ exact
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -306,6 +308,8 @@ def _dense_self_pairs(sets: DataFrame, index, threshold: float,
     def gen(batches):
         import pyarrow as pa
 
+        keep_zip_directory_cache()
+
         vocab, ids, ns, bp = bc.value
         n, v = len(ids), len(vocab)
         nb = ns.astype(np.float64)
@@ -401,6 +405,8 @@ def _dense_contamination(train_sets: DataFrame, eval_index, min_common: int,
 
     def gen(batches):
         import pyarrow as pa
+
+        keep_zip_directory_cache()
 
         vocab, ev_ids, ev_ns, indptr, flat = bc.value
         n_ev, v = len(ev_ids), len(vocab)
@@ -609,6 +615,8 @@ def _dense_minhash_signatures(
 
     def gen(batches):
         import pyarrow as pa
+
+        keep_zip_directory_cache()
 
         vh, hv = bc.value
         schema = pa.schema([

@@ -313,7 +313,7 @@ class ReplayRunner:
     def _touched(self, st) -> list[int]:
         """Touched-bucket set declared for a segment's stats row: ALL
         buckets (the fold manifests then record the actual set; an
-        undeclared bucket with no rows forms no group, so its state files
+        undeclared bucket with no rows gets no manifest row, so its state files
         carry forward untouched), none for a segment without events."""
         return [] if st is None else list(range(self.table.n_buckets))
 
@@ -475,7 +475,7 @@ class ReplayRunner:
                         # schema — consume it only if it matches reality
                         want = [c.name for c in self.table.columns()]
                         have = [c for c in prepared.columns
-                                if c not in (OP_COL, "event_lsn", "__pk")
+                                if c not in (OP_COL, "event_lsn")
                                 and not c.startswith("__bucket")
                                 and c != MIN_LSN_COL]
                         if have != want:

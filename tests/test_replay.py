@@ -83,6 +83,10 @@ def test_replay_matches_oracle(spark, tmproot, binlog, oracle_df, sink, pipeline
     evolves = [r for r in recs if str(r.get("operation", "")).startswith("evolve:")]
     assert len(evolves) == len(schema_change_plan(N_EVENTS))
     assert all(r["seconds"] >= 0 for r in evolves)
+    # every data segment's record splits its fold job into phases
+    folds = [r for r in recs if "sec_job" in r]
+    assert folds and all(r["rows_in"] > 0 and r["rows_out"] > 0 and r["bytes_written"] > 0
+                         and min(r["t_read"], r["t_lww"], r["t_write"]) >= 0 for r in folds)
     # metrics per micro-batch: every data segment produced a lineage row
     lineage = table.lineage()
     data_keys = {m["epoch_key"] for m in metrics if "n_upserts" in m and not m.get("skipped")}
