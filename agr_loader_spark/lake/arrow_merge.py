@@ -178,8 +178,9 @@ def make_bucket_fold(
     """Build the ``mapInArrow`` function for one commit.
 
     Its input is a changeset partitioned so that all rows of a bucket sit
-    in one partition (``LakeTable.prepare_changes`` /
-    ``balanced_fold_repartition``); it yields one manifest row per bucket
+    in one partition (``LakeTable.prepare_changes``, or
+    ``project_changes`` then ``balanced_fold_repartition``); it yields
+    one manifest row per bucket
     present. Everything captured here is tiny metadata (column specs +
     file lists); the heavy inputs (batch rows, state files) stay
     distributed.
@@ -214,10 +215,10 @@ def make_bucket_fold(
     operators.dedup.precombine_lww — at most one winner row per key per
     map partition, carrying ``__min_lsn`` (PRECOMBINE_COLS) for the
     per-bucket offset range. Re-delivery dedup counters are unmeasurable
-    after the local collapse: n_dups is 0 (the runner supplies the
-    counters via lineage — approx by default, exact with
-    ``exact_counts=True``) and n_upserts counts the rows written, which
-    stays exact. LWW vs state and delete routing are unchanged.
+    after the local collapse: n_dups is 0 (the commit records no dup
+    count; the replay runner adds HLL estimates) and n_upserts counts
+    the upserts applied — winners that passed the mode's filter, not the
+    kept state rows. LWW vs state and delete routing are unchanged.
     """
     names = [c.name for c in current]
     out_schema = arrow_schema(current)
@@ -255,7 +256,7 @@ def make_bucket_fold(
             out = out.append_column(DELTA_SEQ, pa.array(np.full(len(out), seq, np.int64)))
             n_upserts = int(win_u.sum())
         else:
-            ups = win.filter(win_u).select(names)
+            ups = out = win.filter(win_u).select(names)
             if state is not None and len(state):
                 state_keys = state[key]
                 if mode == "insert_if_absent":
@@ -268,10 +269,10 @@ def make_bucket_fold(
                         ups = ups.filter(pc.is_in(ups[key], value_set=state_keys))
                 out = pa.concat_tables([state.filter(keep), ups.cast(out_schema)])
             elif mode == "update_only":  # empty bucket: nothing to patch
-                out = ups.slice(0, 0)
-            else:
-                out = ups
-            n_upserts = len(out) if precombined else int((is_u & ~dup).sum())
+                ups = out = ups.slice(0, 0)
+            # precombined: the local collapse erased the U-event count, so
+            # count the upserts this fold applied (kept state rows excluded)
+            n_upserts = len(ups) if precombined else int((is_u & ~dup).sum())
         t2 = time.perf_counter()
 
         rel_path, n_bytes = None, 0

@@ -52,6 +52,7 @@ import time
 from dataclasses import dataclass
 from typing import Any, Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -80,6 +81,39 @@ def _fold_manifests(rows: list) -> list:
         raise RuntimeError("bucket fold saw a bucket in more than one partition: "
                            "the changeset must be prepared (prepare_changes)")
     return rows
+
+
+def spark_hash_int(v: np.ndarray) -> np.ndarray:
+    """Spark's ``hash(int)`` (Murmur3_x86_32 of one 4-byte int, seed
+    42), as int32 — the function HashPartitioning applies to an int
+    expression."""
+    def rotl(x, r):
+        return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
+
+    k = np.asarray(v, dtype=np.int32).view(np.uint32)
+    k = rotl(k * np.uint32(0xCC9E2D51), 15) * np.uint32(0x1B873593)
+    h = rotl(np.uint32(42) ^ k, 13) * np.uint32(5) + np.uint32(0xE6546B64)
+    h ^= np.uint32(4)
+    h ^= h >> np.uint32(16)
+    h *= np.uint32(0x85EBCA6B)
+    h ^= h >> np.uint32(13)
+    h *= np.uint32(0xC2B2AE35)
+    h ^= h >> np.uint32(16)
+    return h.view(np.int32)
+
+
+def fold_salts(p: int) -> np.ndarray:
+    """For each partition i in [0, p): the smallest non-negative int v
+    with pmod(hash(v), p) == i, so ``repartition(p, salt)`` sends a row
+    salted with entry i to partition i."""
+    n = 64 * p
+    while True:
+        # np.mod by a positive divisor is non-negative, like Spark's pmod
+        hit, first = np.unique(np.mod(spark_hash_int(np.arange(n)), p),
+                               return_index=True)
+        if len(hit) == p:
+            return first
+        n *= 2
 
 
 def _phase_sums(manifests: list) -> dict:
@@ -414,6 +448,8 @@ class LakeTable:
     # minimum rows to justify an extra fold task on sparse segments (each
     # task costs a python-worker round-trip + a parquet open/write)
     SPARSE_FOLD_ROWS = 1024
+    # state buckets one sparse fold task may rewrite (see fold_partitions)
+    SPARSE_FOLD_BUCKETS_PER_TASK = 2
 
     def fold_partitions(self, n_touched: int, n_rows: int | None = None) -> int:
         """Fold task granularity: one wave of cores (wave_mult x cores;
@@ -431,8 +467,6 @@ class LakeTable:
         Hot-BUCKET skew (not hot keys — those hash-spread) is the case
         extra waves still help; env-tunable for that and for
         measurement."""
-        import os
-
         cores = self.spark.sparkContext.defaultParallelism
         want = int(os.environ.get("SPARK_FOLD_WAVE_MULT", "1")) * cores
         if n_rows:
@@ -451,84 +485,52 @@ class LakeTable:
             # over a LARGE table into one task would serialize up to
             # n_buckets full state rewrites — the changeset being tiny
             # says nothing about the state volume. Buckets-with-state
-            # comes straight from the manifest; the per-task rewrite
-            # budget is env-tunable.
+            # comes straight from the manifest.
             sparse = -(-int(n_rows) // self.SPARSE_FOLD_ROWS)
             if sparse < want:
-                per_task = max(1, int(os.environ.get(
-                    "SPARK_SPARSE_FOLD_BUCKETS_PER_TASK", "2")))
                 n_state = sum(1 for f in self._m["buckets"].values() if f)
-                state_floor = -(-min(n_state, n_touched) // per_task)
+                state_floor = -(-min(n_state, n_touched)
+                                // self.SPARSE_FOLD_BUCKETS_PER_TASK)
                 want = min(want, max(sparse, state_floor))
         return max(1, min(n_touched, want))
 
-    def _partition_salts(self, p: int) -> list[int] | None:
-        """For each shuffle partition i in [0, p): an int value v with
-        pmod(murmur3(v), p) == i. Spark's DataFrame repartition cannot
-        place by value directly — HashPartitioning re-hashes the
-        expression — so we probe Spark's own hash once (tiny driver-side
-        job, cached per (session, p)) and salt through it. Lets the fold
-        put EXACTLY ceil(touched/p) buckets in every partition instead
-        of the ~2x spread of hashing 64 small distinct keys, which was
-        the fold stage's wave-tail at high parallelism."""
-        cache = getattr(self, "_salt_cache", None)
-        if cache is not None and cache[0] == p:
-            return cache[1]
-        need = p
-        found: dict[int, int] = {}
-        probe = 0
-        while len(found) < need and probe < 64 * p:
-            batch = list(range(probe, probe + 8 * p))
-            probe += 8 * p
-            rows = self.spark.createDataFrame(
-                [(v,) for v in batch], "v int"
-            ).select("v", F.pmod(F.hash(F.col("v")), F.lit(p)).alias("t")).collect()
-            for r in rows:
-                found.setdefault(int(r["t"]), int(r["v"]))
-        if len(found) < need:
-            # Probe budget exhausted (astronomically unlikely for murmur3
-            # over 64p consecutive ints, but fail loud-and-clear rather
-            # than with an opaque KeyError mid-merge). Caller falls back
-            # to the plain bucket-hash repartition.
-            self._salt_cache = (p, None)
-            return None
-        salts = [found[i] for i in range(p)]
-        self._salt_cache = (p, salts)
-        return salts
+    def project_changes(self, changes: DataFrame, lsn_col: str, columns=None,
+                        keep: Sequence[str] = ()) -> DataFrame:
+        """Stage-1 projection of a changeset: cast to the current schema
+        (or to ``columns``, a future schema the runner's prefetch plans
+        under), the ``__op`` column, the lsn as long, the ``keep``
+        columns as they are, and the ``__bucket`` column."""
+        cur = self.columns() if columns is None else columns
+        return changes.select(
+            *[F.col(c.name).cast(c.type).alias(c.name) for c in cur],
+            F.col(OP_COL),
+            F.col(lsn_col).cast("long").alias(lsn_col),
+            *[F.col(c) for c in keep],
+        ).withColumn(BUCKET_COL, self._bucket_expr(F.col(self.key)))
 
     def balanced_fold_repartition(
         self, df: DataFrame, n_touched: int, n_rows: int | None = None
     ) -> DataFrame:
-        """Repartition a prepared changeset for the bucket fold with a
-        BALANCED bucket->partition assignment: bucket b goes to partition
-        b % p (via the salt probe above), so fold waves have no
-        straggler partitions carrying 2-3x the buckets of others."""
+        """Place a projected changeset for the bucket fold, BALANCED:
+        bucket b goes to partition b % p, so every partition carries
+        ceil(touched/p) buckets instead of the ~2x spread of hashing a
+        few dozen small bucket ids (the fold wave's straggler tail).
+        Spark's repartition cannot place by value — HashPartitioning
+        re-hashes the expression — so each bucket is mapped to the salt
+        that Spark's hash sends to partition b % p (fold_salts)."""
         p = self.fold_partitions(n_touched, n_rows)
         if p <= 1:
             return df.repartition(1)
-        salts = self._partition_salts(p)
-        if salts is None:  # probe exhausted: plain bucket-hash placement
-            return df.repartition(p, F.col(BUCKET_COL))
-        by_bucket = F.array(*[F.lit(salts[b % p]) for b in range(self.n_buckets)])
+        salts = fold_salts(p)
+        by_bucket = F.array(*[F.lit(int(salts[b % p])) for b in range(self.n_buckets)])
         return df.repartition(p, F.element_at(by_bucket, F.col(BUCKET_COL) + 1))
 
     def prepare_changes(self, changes: DataFrame, lsn_col: str, n_touched: int,
                         n_rows: int | None = None) -> DataFrame:
-        """Stage-1 of the arrow merge as a standalone frame: cast to the
-        current schema, add the bucket column, repartition for the fold.
-        Used by the runner to PIPELINE the next micro-batch's scan+shuffle
-        under the current micro-batch's fold (persist + materialize on a
-        second thread; pure compute, no commit, so exactly-once is
-        untouched)."""
-        cur = self.columns()
-        prepared = changes.select(
-            *[F.col(c.name).cast(c.type).alias(c.name) for c in cur],
-            F.col(OP_COL),
-            F.col(lsn_col).cast("long").alias(lsn_col),
-        ).withColumn(BUCKET_COL, self._bucket_expr(F.col(self.key)))
-        return prepared.repartition(
-            self.fold_partitions(n_touched, n_rows), F.col(BUCKET_COL)
-        )
+        """Stage-1 of the bucket fold as a standalone frame: the
+        projection, placed for the fold."""
+        return self.balanced_fold_repartition(
+            self.project_changes(changes, lsn_col), n_touched, n_rows)
 
     def merge_arrow(
         self,
@@ -556,136 +558,23 @@ class LakeTable:
         rewrites each touched bucket purely from ``changes`` — the
         compaction path, where ``changes`` IS the resolved state.
         ``precombined=True``: ``changes`` went through
-        operators.dedup.precombine_lww (one winner row per key + exact
-        counter columns) — requires ``prepared=True``; the fold reads
-        the counters instead of re-deduping.
+        operators.dedup.precombine_lww (one winner row per key per map
+        partition) — requires ``prepared=True``. The local collapse
+        erased re-delivery multiplicity, so the commit records no
+        ``n_duplicates_dropped`` rather than a false zero, and
+        ``n_upserts`` counts the upserts the fold applied.
         """
-        from .arrow_merge import MANIFEST_SCHEMA, MERGE_MODES, make_bucket_fold
+        from .arrow_merge import MERGE_MODES
 
         if mode not in MERGE_MODES:
             raise ValueError(f"unknown merge mode {mode!r}")
         if precombined and not prepared:
             raise ValueError("precombined changesets must arrive prepared "
                              "(combine + repartition happen upstream)")
-        if epoch_key in self.applied_epochs():
-            return {"skipped": True, "epoch_key": epoch_key, "snapshot_id": self.snapshot_id}
-
-        cur = self.columns()
-        if touched_buckets is None:
-            if not prepared:
-                changes = self.prepare_changes(changes, lsn_col, self.n_buckets)
-                prepared = True
-            touched_buckets = [
-                r[0] for r in changes.select(BUCKET_COL).distinct().collect()
-            ]
-        touched = sorted(int(b) for b in touched_buckets)
-        if not touched:
-            return self._commit_noop(epoch_key, lineage)
-        if not replace_state and any(
-            fe.get("kind") == "delta"
-            for b in touched for fe in self._m["buckets"].get(str(b), [])
-        ):
-            # the fold reads base files only; a merge-on-read delta would
-            # be taken for live state (tombstones included)
-            raise ValueError("touched buckets carry merge-on-read delta files: "
-                             "compact() before a copy-on-write commit")
-        if not prepared:
-            changes = self.prepare_changes(changes, lsn_col, len(touched))
-
-        new_sid = self.snapshot_id + 1
-        stage_rel = os.path.join("data", str(new_sid))
-        fold = make_bucket_fold(
-            root=self.root,
-            stage_rel=stage_rel,
-            key=self.key,
-            current=cur,
-            schema_versions={
-                int(v): [ColumnSpec.from_json(d) for d in cols]
-                for v, cols in self._m["schema_versions"].items()
-            },
-            bucket_files={} if replace_state else {
-                int(b): fs
-                for b, fs in self._m["buckets"].items()
-                if int(b) in set(touched)
-            },
-            op_col=OP_COL,
-            lsn_col=lsn_col,
-            bucket_col=BUCKET_COL,
-            mode=mode,
-            precombined=precombined,
+        return self._commit_fold(
+            changes, epoch_key, lsn_col, lineage, touched_buckets, prepared,
+            mode=mode, replace_state=replace_state, precombined=precombined,
         )
-        # the prepared partitioning puts every row of a bucket in one
-        # partition (hash of the bucket or of its balanced salt), so the
-        # fold is a narrow map: no second shuffle here.
-        folded = changes.mapInArrow(fold, MANIFEST_SCHEMA)
-        _tj = time.monotonic()
-        manifests = _fold_manifests(folded.collect())
-        sec_job = round(time.monotonic() - _tj, 4)
-
-        sv = self._m["schema_version"]
-        new_buckets = dict(self._m["buckets"])
-        n_upserts = n_deletes = n_dups = 0
-        per_bucket = {}
-        for r in manifests:
-            files = []
-            if r["path"] is not None:
-                files = [{"path": r["path"], "schema_version": sv}]
-            new_buckets[str(int(r["bucket"]))] = files
-            n_upserts += int(r["n_upserts"])
-            n_deletes += int(r["n_deletes"])
-            n_dups += int(r["n_dups"])
-            # per-partition lineage: source-offset range absorbed by this
-            # bucket in this commit (north rule: offset -> snapshot id)
-            per_bucket[str(int(r["bucket"]))] = {
-                "min_lsn": int(r["min_lsn"]), "max_lsn": int(r["max_lsn"]),
-            }
-
-        lin = _resolve_lineage(lineage)
-        # precombined changesets: the fold cannot see re-delivery
-        # multiplicity (the map-local combine dropped the copies). The
-        # runner either measured exact counts in its planning pass
-        # (exact_counts=True -> n_upserts_exact / n_dups_exact overrides)
-        # or sent approx counters plus the counters_precombined marker —
-        # then the fold's dup sum is meaningless (always 0) and is
-        # OMITTED rather than recorded as a false zero; n_upserts counts
-        # APPLIED upserts (winner rows written), which the fold still
-        # measures exactly (runner._apply_data_segment).
-        exact_u = lin.pop("n_upserts_exact", None)
-        exact_dups = lin.pop("n_dups_exact", None)
-        pre_approx = bool(lin.pop("counters_precombined", False))
-        lin.update(
-            {
-                "epoch_key": epoch_key,
-                "snapshot_id": new_sid,
-                "n_upserts": n_upserts if exact_u is None else int(exact_u),
-                "n_deletes": n_deletes,
-                # actual touched set (buckets that received rows), not the
-                # caller's declared superset — the replay runner declares
-                # all buckets
-                "buckets_touched": sorted(int(r["bucket"]) for r in manifests),
-                "per_bucket_offsets": per_bucket,
-            }
-        )
-        if not pre_approx or exact_dups is not None:
-            # EXACT re-delivery dedup count, measured where the dedup
-            # happens (the bucket fold), or — precombined exact mode —
-            # in the runner's narrow planning pass
-            lin["n_duplicates_dropped"] = (
-                n_dups if exact_dups is None else int(exact_dups)
-            )
-        m = self._child_manifest(
-            new_sid, "compact" if replace_state else "merge-arrow", epoch_key
-        )
-        m["buckets"] = new_buckets
-        self._append_lineage(lin)
-        self._commit(m)
-        self._m = m
-        # sec_job isolates the Spark job wall from the driver turn around
-        # it (plan build + manifest bookkeeping) — the per-commit fixed
-        # floor decomposition in BENCH/BASELINE.md reads these fields;
-        # the fold's phase sums split the job's Python time
-        return {"skipped": False, "sec_job": sec_job,
-                **_phase_sums(manifests), **lin}
 
     def merge_delta(
         self,
@@ -704,12 +593,29 @@ class LakeTable:
         pure writes. read() resolves LWW across base+deltas by
         (__lsn, __seq); compact() collapses buckets back to base files.
         Same exactly-once manifest commit as merge_arrow."""
+        return self._commit_fold(changes, epoch_key, lsn_col, lineage,
+                                 touched_buckets, prepared, mode="delta")
+
+    def _commit_fold(
+        self,
+        changes: DataFrame,
+        epoch_key: str,
+        lsn_col: str,
+        lineage: dict | None,
+        touched_buckets: Sequence[int] | None,
+        prepared: bool,
+        mode: str,
+        replace_state: bool = False,
+        precombined: bool = False,
+    ) -> dict:
+        """The one fold commit body: run the bucket fold over the touched
+        buckets, then commit its manifests atomically and exactly once.
+        Copy-on-write replaces each folded bucket's file list; ``mode
+        'delta'`` (merge-on-read) appends a delta entry instead."""
         from .arrow_merge import MANIFEST_SCHEMA, make_bucket_fold
 
         if epoch_key in self.applied_epochs():
-            return {"skipped": True, "epoch_key": epoch_key,
-                    "snapshot_id": self.snapshot_id}
-        cur = self.columns()
+            return {"skipped": True, "epoch_key": epoch_key, "snapshot_id": self.snapshot_id}
         if touched_buckets is None:
             if not prepared:
                 changes = self.prepare_changes(changes, lsn_col, self.n_buckets)
@@ -720,34 +626,61 @@ class LakeTable:
         touched = sorted(int(b) for b in touched_buckets)
         if not touched:
             return self._commit_noop(epoch_key, lineage)
+        delta = mode == "delta"
+        reads_state = not (delta or replace_state)
+        if reads_state and any(
+            fe.get("kind") == "delta"
+            for b in touched for fe in self._m["buckets"].get(str(b), [])
+        ):
+            # the fold reads base files only; a merge-on-read delta would
+            # be taken for live state (tombstones included)
+            raise ValueError("touched buckets carry merge-on-read delta files: "
+                             "compact() before a copy-on-write commit")
         if not prepared:
             changes = self.prepare_changes(changes, lsn_col, len(touched))
 
         new_sid = self.snapshot_id + 1
-        stage_rel = os.path.join("data", str(new_sid))
         fold = make_bucket_fold(
-            root=self.root, stage_rel=stage_rel, key=self.key, current=cur,
-            schema_versions={}, bucket_files={}, op_col=OP_COL,
-            lsn_col=lsn_col, bucket_col=BUCKET_COL, mode="delta", seq=new_sid,
+            root=self.root,
+            stage_rel=os.path.join("data", str(new_sid)),
+            key=self.key,
+            current=self.columns(),
+            schema_versions={
+                int(v): [ColumnSpec.from_json(d) for d in cols]
+                for v, cols in self._m["schema_versions"].items()
+            },
+            bucket_files={
+                int(b): fs for b, fs in self._m["buckets"].items()
+                if int(b) in set(touched)
+            } if reads_state else {},
+            op_col=OP_COL,
+            lsn_col=lsn_col,
+            bucket_col=BUCKET_COL,
+            mode=mode,
+            precombined=precombined,
+            seq=new_sid,
         )
+        # the prepared partitioning puts every row of a bucket in one
+        # partition, so the fold is a narrow map: no second shuffle here.
         _tj = time.monotonic()
         manifests = _fold_manifests(changes.mapInArrow(fold, MANIFEST_SCHEMA).collect())
         sec_job = round(time.monotonic() - _tj, 4)
 
         sv = self._m["schema_version"]
         new_buckets = dict(self._m["buckets"])
-        n_upserts = n_deletes = n_dups = 0
         per_bucket = {}
         for r in manifests:
             b = str(int(r["bucket"]))
-            if r["path"] is not None:
-                new_buckets[b] = list(new_buckets.get(b, [])) + [
-                    {"path": r["path"], "schema_version": sv,
-                     "kind": "delta", "seq": new_sid}
-                ]
-            n_upserts += int(r["n_upserts"])
-            n_deletes += int(r["n_deletes"])
-            n_dups += int(r["n_dups"])
+            if delta:
+                if r["path"] is not None:
+                    new_buckets[b] = list(new_buckets.get(b, [])) + [
+                        {"path": r["path"], "schema_version": sv,
+                         "kind": "delta", "seq": new_sid}]
+            else:
+                new_buckets[b] = [] if r["path"] is None else [
+                    {"path": r["path"], "schema_version": sv}]
+            # per-partition lineage: source-offset range absorbed by this
+            # bucket in this commit (north rule: offset -> snapshot id)
             per_bucket[b] = {"min_lsn": int(r["min_lsn"]),
                              "max_lsn": int(r["max_lsn"])}
 
@@ -756,18 +689,31 @@ class LakeTable:
             {
                 "epoch_key": epoch_key,
                 "snapshot_id": new_sid,
-                "n_upserts": n_upserts,
-                "n_deletes": n_deletes,
-                "n_duplicates_dropped": n_dups,
+                "n_upserts": sum(int(r["n_upserts"]) for r in manifests),
+                "n_deletes": sum(int(r["n_deletes"]) for r in manifests),
+                # actual touched set (buckets that received rows), not the
+                # caller's declared superset — the replay runner declares
+                # all buckets
                 "buckets_touched": sorted(int(r["bucket"]) for r in manifests),
                 "per_bucket_offsets": per_bucket,
             }
         )
-        m = self._child_manifest(new_sid, "merge-delta", epoch_key)
+        if not precombined:
+            # EXACT re-delivery dedup count, measured where the dedup
+            # happens (the bucket fold). A precombined changeset lost its
+            # copies in the map-local combine: no count beats a false zero.
+            lin["n_duplicates_dropped"] = sum(int(r["n_dups"]) for r in manifests)
+        operation = ("merge-delta" if delta else
+                     "compact" if replace_state else "merge-arrow")
+        m = self._child_manifest(new_sid, operation, epoch_key)
         m["buckets"] = new_buckets
         self._append_lineage(lin)
         self._commit(m)
         self._m = m
+        # sec_job isolates the Spark job wall from the driver turn around
+        # it (plan build + manifest bookkeeping) — the per-commit fixed
+        # floor decomposition in BENCH/BASELINE.md reads these fields;
+        # the fold's phase sums split the job's Python time
         return {"skipped": False, "sec_job": sec_job,
                 **_phase_sums(manifests), **lin}
 
@@ -879,10 +825,7 @@ class LakeTable:
         new_sid = self.snapshot_id + 1
         # deferred lineage values are NOT resolved here: a noop commit ran
         # no action, so an Observation-backed callable would block forever
-        lin = {k: (None if callable(v) else v)
-               for k, v in (lineage or {}).items()
-               if k not in ("n_upserts_exact", "n_dups_exact",
-                            "counters_precombined")}
+        lin = {k: (None if callable(v) else v) for k, v in (lineage or {}).items()}
         lin.update({"epoch_key": epoch_key, "snapshot_id": new_sid,
                     "n_upserts": 0, "n_deletes": 0, "buckets_touched": []})
         m = self._child_manifest(new_sid, "merge-noop", epoch_key)

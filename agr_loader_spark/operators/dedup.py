@@ -135,15 +135,11 @@ def precombine_lww(
     with identical payloads, so the surviving row is unambiguous.
 
     Commit-level re-delivery dedup counters cannot be measured after a
-    local collapse. The replay runner reports them approx by default
-    (HLL distinct-lsn expressions riding the narrow planning agg — no
-    extra pass) and exactly under ``ReplayRunner(exact_counts=True)``
-    (a distinct-lsn two-level HashAggregate over (epoch, seg, lsn, op)
-    in the planning pass — one O(n)-row narrow shuffle, measured ~60
-    core-s per 34M-event segment, which is why it is opt-in). The
-    precombine equivalence tests hold the exact mode bit-identical to
-    the uncombined fold's counts; final table STATE is identical in
-    every mode.
+    local collapse. The replay runner reports them as HLL estimates
+    (distinct-lsn expressions riding the narrow planning agg — no extra
+    pass); ``ReplayRunner(precombine=False)`` skips the combine, and its
+    bucket fold counts them exactly. Final table STATE is identical in
+    both modes (the precombine equivalence tests).
     """
     import pyarrow as pa
     from pyspark.sql.types import LongType, StructField, StructType

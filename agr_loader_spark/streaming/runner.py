@@ -42,6 +42,16 @@ from ..lake.table import OP_COL, LakeTable
 from ..operators.dedup import MIN_LSN_COL
 from ..plans.merge import plan_changeset
 
+# relative standard error of the planning pass's HLL distinct-lsn counters
+# (precombined runs). The dup estimate is n_events - distinct_estimate, so
+# its absolute error is rsd * n_events: at typical re-delivery rates (<1%)
+# the sign is informative, the magnitude only to a few % of the segment.
+# Spark's HLL++ update slows superlinearly as registers grow (measured on
+# the 4M-event bench log: the two sketches cost 3.6 s at rsd 0.01, 0.9 s
+# at 0.02, 0.5 s at 0.03 — a fixed per-replay tax on every commit
+# interval).
+PLAN_HLL_RSD = 0.02
+
 
 class ReplayRunner:
     def __init__(
@@ -51,8 +61,7 @@ class ReplayRunner:
         source_path: str | None = None,
         source_df: DataFrame | None = None,
         sink: str = "arrow",  # "arrow" (2-stage state-colocated COW) | "delta" (write-optimized MOR)
-        precombine: bool | None = None,  # arrow sink only: map-LOCAL LWW combine (operators/dedup.py:precombine_lww, Arrow-vectorized mapInArrow — NOT a groupBy agg; see its docstring for why) collapses each map partition to one winner row per key BEFORE the bucket shuffle, cutting shuffled/folded payload bytes by the feed's update multiplicity (zipf: most event volume is LWW losers) with zero added exchanges and bounded per-task memory. Exact dedup counters move to the narrow planning pass (_plan). None (default) = on for the arrow sink, and bench.py re-verifies the claim every run with an uncombined probe rep rather than freezing it here (the r4 JVM-agg combine's "faster everywhere" claim was falsified by exactly such a probe; BENCH/BASELINE.md round-4 precombine section).
-        exact_counts: bool = False,  # precombine mode only: the map-local combine erases re-delivery multiplicity before the fold, so exact n_upserts / n_duplicates_dropped need a two-level distinct-lsn aggregation in the planning pass — a full extra pass over the segment (~60 core-s per 34M events, measured round 4) paid for a metrics counter. Default OFF: lineage carries n_upserts_approx / n_duplicates_dropped_approx from approx_count_distinct folded into the same narrow planning agg (no extra shuffle, one expression), plus the fold-exact applied-upsert count as n_upserts. Turn on for audits where distinct-event counts must be exact. Uncombined runs always have exact counters — the fold measures them for free.
+        precombine: bool | None = None,  # arrow sink only: map-LOCAL LWW combine (operators/dedup.py:precombine_lww, Arrow-vectorized mapInArrow — NOT a groupBy agg; see its docstring for why) collapses each map partition to one winner row per key BEFORE the bucket shuffle, cutting shuffled/folded payload bytes by the feed's update multiplicity (zipf: most event volume is LWW losers) with zero added exchanges and bounded per-task memory. The combine erases re-delivery multiplicity, so lineage carries HLL estimates n_upserts_approx / n_duplicates_dropped_approx from the narrow planning pass (_plan) and n_upserts counts the upserts the fold applied; precombine=False keeps exact counters (the fold measures them). None (default) = on for the arrow sink, and bench.py re-verifies the claim every run with an uncombined probe rep rather than freezing it here (the r4 JVM-agg combine's "faster everywhere" claim was falsified by exactly such a probe; BENCH/BASELINE.md round-4 precombine section).
         pipeline: bool = False,  # async fold overlap: prefetch the next segment's scan+shuffle (schema-aware) under the current fold (the overlap win flips sign across hosts/topologies — r3 measured it +53% wall, the r4 host measured it faster; bench.py re-measures it with a probe rep every run)
         compact_at_end: bool = True,  # delta sink only: collapse MOR deltas to base files after the last segment (inside run(), so measured walls are apples-to-apples with the COW sink)
         prune_applied: bool = True,  # resume: skip fully-applied epochs BEFORE the planning scan (via the epoch_final lineage stamp), so resuming a 10^10-event replay near its end re-scans only the tail, not the whole log. Relies on the binlog invariant that an epoch partition is immutable once its final segment committed (events are lsn-total-ordered, so appending to an already-applied epoch would be out-of-order anyway). Set False for a source that violates it.
@@ -74,7 +83,6 @@ class ReplayRunner:
         if precombine and sink != "arrow":
             raise ValueError("precombine is only supported on the arrow sink")
         self.precombine = precombine
-        self.exact_counts = bool(exact_counts)
         self.compact_at_end = compact_at_end
         self.prune_applied = bool(prune_applied)
 
@@ -147,95 +155,29 @@ class ReplayRunner:
                 (F.col("epoch") == r["epoch"]) & (F.col("event_lsn") > r["event_lsn"]), 2
             ).otherwise(0)
         data = ev.filter(F.col("op") != "S")
-        if self.precombine and self.exact_counts:
-            # the map-LOCAL combine (operators/dedup.py:precombine_lww)
-            # collapses LWW losers before the fold ever sees them, so the
-            # fold can no longer count re-deliveries. Measure them HERE,
-            # exactly, in the same narrow planning scan: level 1 groups by
-            # (epoch, seg, lsn) — a binlog lsn names one event, so copies
-            # of an lsn are re-deliveries and collapse map-side in the
-            # partial aggregation — level 2 counts distinct events and
-            # distinct U-events per segment. All codegen HashAggregate
-            # (primitive buffers only); the extra shuffle carries one
-            # ~30-byte row per distinct lsn, once per replay. That shuffle
-            # is why this is OPT-IN (exact_counts=True): one row per
-            # distinct event is O(n) rows — narrow, but measured ~60
-            # core-s per 34M-event segment at 4 executors, a full extra
-            # pass paid for a metrics counter (BENCH/BASELINE.md r4).
-            lvl1 = data.groupBy(
-                "epoch", seg_expr.alias("seg"), "event_lsn"
-            ).agg(
-                F.count("*").alias("copies"),
-                # int flag, not max(op): a string agg buffer is not a
-                # mutable-primitive type, which would silently demote the
-                # whole level-1 aggregation to SortAggregate (per-partition
-                # sort) — tests/test_plans.py gates this stays HashAggregate
-                F.max(
-                    F.when(F.col("op") == "D", 1).otherwise(0)
-                ).alias("is_d"),  # copies of an lsn are identical events
-            )
-            aggs = [
-                F.sum("copies").alias("n_events"),
-                F.min("event_lsn").alias("min_lsn"),
-                F.max("event_lsn").alias("max_lsn"),
-                F.count("*").alias("n_unique"),
-                # changeset op mapping (plans/merge.py): everything
-                # non-delete becomes an upsert
-                F.sum(F.when(F.col("is_d") == 0, 1).otherwise(0)).alias("n_unique_u"),
+        aggs = [
+            F.count("*").alias("n_events"),
+            F.min("event_lsn").alias("min_lsn"),
+            F.max("event_lsn").alias("max_lsn"),
+        ]
+        if self.precombine:
+            # the map-local combine erases re-delivery multiplicity before
+            # the fold, so approximate the distinct-event counters here.
+            # An lsn names one event, so distinct-lsn needs no doc_id
+            # decode — these two expressions ride the same narrow
+            # segment-stats partial aggregation (HLL sketch buffers, no
+            # extra shuffle). Runs that need exact counters replay with
+            # precombine=False, where the fold measures them.
+            aggs += [
+                F.approx_count_distinct("event_lsn", PLAN_HLL_RSD)
+                .alias("n_unique_approx"),
+                F.approx_count_distinct(
+                    F.when(F.col("op") != "D", F.col("event_lsn")), PLAN_HLL_RSD
+                ).alias("n_unique_u_approx"),
             ]
-            stats_rows = lvl1.groupBy("epoch", "seg").agg(*aggs).collect()
-        else:
-            aggs = [
-                F.count("*").alias("n_events"),
-                F.min("event_lsn").alias("min_lsn"),
-                F.max("event_lsn").alias("max_lsn"),
-            ]
-            if self.precombine:
-                # default (approx) counters for precombined runs: the
-                # combine erases re-delivery multiplicity before the fold,
-                # so approximate it here. An lsn names one event, so
-                # distinct-lsn needs no doc_id decode — these two extra
-                # expressions ride the same narrow segment-stats partial
-                # aggregation (HLL sketch buffers, no extra shuffle),
-                # compatible with the planning pass's 3-column scan.
-                # rsd 0.02 default: the dup estimate is n_events -
-                # distinct_estimate, so its absolute error is
-                # rsd * n_events — at typical re-delivery rates (<1%)
-                # the sign is informative, the magnitude only to a few %
-                # of the segment. The rsd is the planning pass's main
-                # cost knob: Spark's HLL++ update slows superlinearly as
-                # registers grow (measured on the 4M-event bench log:
-                # the two sketches cost 3.6 s at rsd 0.01, 0.9 s at
-                # 0.02, 0.5 s at 0.03 — a fixed per-replay tax on every
-                # commit interval). Audits that need tighter counters
-                # can set SPARK_GRAFT_PLAN_HLL_RSD or go fully exact
-                # with exact_counts=True (a full extra pass).
-                rsd = float(os.environ.get("SPARK_GRAFT_PLAN_HLL_RSD",
-                                           "0.02"))
-                aggs += [
-                    F.approx_count_distinct("event_lsn", rsd)
-                    .alias("n_unique_approx"),
-                    F.approx_count_distinct(
-                        F.when(F.col("op") != "D", F.col("event_lsn")), rsd
-                    ).alias("n_unique_u_approx"),
-                ]
-            stats_rows = data.groupBy("epoch", seg_expr.alias("seg")).agg(*aggs).collect()
-        exact = self.precombine and self.exact_counts
         stats = {
-            (r["epoch"], r["seg"]): {
-                "n_events": r["n_events"],
-                "min_lsn": r["min_lsn"],
-                "max_lsn": r["max_lsn"],
-                "n_unique": r["n_unique"] if exact else None,
-                "n_unique_u": r["n_unique_u"] if exact else None,
-                "n_unique_approx": (
-                    r["n_unique_approx"] if self.precombine and not exact else None
-                ),
-                "n_unique_u_approx": (
-                    r["n_unique_u_approx"] if self.precombine and not exact else None
-                ),
-            }
-            for r in stats_rows
+            (r["epoch"], r["seg"]): r.asDict()
+            for r in data.groupBy("epoch", seg_expr.alias("seg")).agg(*aggs).collect()
         }
         all_epochs = sorted({e for e, _ in stats} | set(bounds_by_epoch))
         return all_epochs, bounds_by_epoch, stats
@@ -274,28 +216,24 @@ class ReplayRunner:
             cached = getattr(self, "_base_cache", None)
             if cached is not None and cached[0] == sv:
                 return cached[1]
-        from ..lake.table import BUCKET_COL
-
         cur = columns if columns is not None else self.table.columns()
         data = self._events().filter(F.col("op") != "S")
         changes = plan_changeset(data, self.table, keep_cols=["event_lsn", "epoch"],
                                  columns=cur)
-        base = changes.select(
-            *[F.col(c.name).cast(c.type).alias(c.name) for c in cur],
-            F.col(OP_COL),
-            F.col("event_lsn").cast("long").alias("event_lsn"),
-            F.col("epoch"),
-        ).withColumn(BUCKET_COL, self.table._bucket_expr(F.col(self.table.key)))
+        base = self.table.project_changes(changes, "event_lsn", columns=cur,
+                                          keep=["epoch"])
         if columns is None:
             self._base_cache = (sv, base)
         return base
 
     def _segment_prepared(self, epoch: int, lo, hi, n_touched: int,
-                          n_rows: int | None = None, columns=None) -> DataFrame:
-        """Segment slice of the cached base, shuffled for the fold. The
-        filter sits BELOW the repartition by construction, so the
-        epoch-partition pruning still reaches the scan and the shuffle
-        carries only this segment's rows."""
+                          n_rows: int | None = None,
+                          columns=None) -> tuple[DataFrame, int]:
+        """Segment slice of the cached base, shuffled for the fold, with
+        the fold partition count it is placed for (recorded per commit
+        in _metrics.jsonl). The filter sits BELOW the repartition by
+        construction, so the epoch-partition pruning still reaches the
+        scan and the shuffle carries only this segment's rows."""
         base = self._changeset_base(columns=columns)
         cond = F.col("epoch") == epoch
         if lo is not None:
@@ -308,7 +246,10 @@ class ReplayRunner:
 
             seg = precombine_lww(seg, key=self.table.key, op_col=OP_COL,
                                  lsn_col="event_lsn")
-        return self.table.balanced_fold_repartition(seg, n_touched, n_rows)
+        # fold_partitions is a pure function of its inputs and the
+        # manifest, so this is the p the placement below uses
+        p = self.table.fold_partitions(n_touched, n_rows)
+        return self.table.balanced_fold_repartition(seg, n_touched, n_rows), p
 
     def _touched(self, st) -> list[int]:
         """Touched-bucket set declared for a segment's stats row: ALL
@@ -364,14 +305,14 @@ class ReplayRunner:
         from pyspark import StorageLevel
 
         st = stats.get((epoch, seg))
-        prepared = self._segment_prepared(
+        prepared, p = self._segment_prepared(
             epoch, lo, hi, self._n_touched(st),
             int(st["n_events"]) if st is not None else None,
             columns=columns,
         )
         prepared = prepared.persist(StorageLevel.DISK_ONLY)
         prepared.count()  # materialize scan + shuffle
-        return prepared
+        return prepared, p
 
     def plan(self, epochs: list[int] | None = None):
         """Precompute the replay plan (segment offsets/stats + schema
@@ -474,12 +415,12 @@ class ReplayRunner:
                         # defensive: the prefetch planned under a SIMULATED
                         # schema — consume it only if it matches reality
                         want = [c.name for c in self.table.columns()]
-                        have = [c for c in prepared.columns
+                        have = [c for c in prepared[0].columns
                                 if c not in (OP_COL, "event_lsn")
                                 and not c.startswith("__bucket")
                                 and c != MIN_LSN_COL]
                         if have != want:
-                            prepared.unpersist()
+                            prepared[0].unpersist()
                             prepared = None
                     m = self._apply_data_segment(
                         epoch, seg, lo, hi, stats.get((epoch, seg)), prepared,
@@ -511,20 +452,22 @@ class ReplayRunner:
                 fut.cancel()
                 if fut.done() and not fut.cancelled() and fut.exception() is None:
                     try:
-                        fut.result().unpersist()
+                        fut.result()[0].unpersist()
                     except Exception:
                         pass
             if pool is not None:
                 pool.shutdown(wait=False)
 
     def _apply_data_segment(self, epoch: int, seg: int, lo, hi, stats,
-                            prepared: DataFrame | None = None,
+                            prepared: tuple[DataFrame, int] | None = None,
                             epoch_final: bool = False) -> dict:
+        """Commit one data segment; ``prepared`` is a prefetched
+        (frame, fold partitions) pair from _prepare."""
         epoch_key = f"{epoch}:{seg}"
         t0 = time.monotonic()
         if epoch_key in self.table.applied_epochs():
             if prepared is not None:
-                prepared.unpersist()
+                prepared[0].unpersist()
             return {"epoch_key": epoch_key, "skipped": True}
         n_events = int(stats["n_events"]) if stats is not None else 0
         lineage = {
@@ -537,23 +480,11 @@ class ReplayRunner:
             # (run()'s plan_prune) keys on this to skip the epoch's
             # partition in the next planning scan
             lineage["epoch_final"] = True
-        if self.precombine and stats is not None and \
-                stats.get("n_unique_u") is not None:
+        if self.precombine and stats is not None:
             # the local combine erased re-delivery multiplicity before the
-            # fold; the planning pass counted it exactly (see _plan) —
-            # merge_arrow substitutes these for the fold-summed counters
-            lineage["n_upserts_exact"] = int(stats["n_unique_u"])
-            lineage["n_dups_exact"] = max(
-                0, n_events - int(stats["n_unique"])
-            )
-        elif self.precombine and stats is not None and \
-                stats.get("n_unique_approx") is not None:
-            # default precombined mode: distinct-event counts are approx
-            # (HLL in the planning agg); n_upserts stays exact but counts
-            # APPLIED upserts (fold winners written), not distinct U
-            # events — merge() drops the unmeasurable fold dup counter
-            # when it sees counters_precombined (lake/table.py)
-            lineage["counters_precombined"] = True
+            # fold, so distinct-event counts are HLL estimates from the
+            # planning agg; merge_arrow(precombined=True) records the
+            # applied upserts as n_upserts and no exact dup count
             lineage["n_upserts_approx"] = int(stats["n_unique_u_approx"])
             lineage["n_duplicates_dropped_approx"] = max(
                 0, n_events - int(stats["n_unique_approx"])
@@ -563,6 +494,7 @@ class ReplayRunner:
             prepared = self._segment_prepared(epoch, lo, hi,
                                               self._n_touched(stats),
                                               n_events or None)
+        prepared, fold_partitions = prepared
         if self.sink == "delta":
             # MOR: the fold appends delta files without ever reading
             # bucket state
@@ -579,6 +511,7 @@ class ReplayRunner:
                 precombined=self.precombine,
             )
         prepared.unpersist()
+        result["fold_partitions"] = fold_partitions
         result["seconds"] = round(time.monotonic() - t0, 4)
         self._emit(result)
         return result

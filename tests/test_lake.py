@@ -435,3 +435,64 @@ def test_fold_keeps_batch_bigint_exact_next_to_nulls(spark, tmproot, sink):
                                  "k string, v bigint, __op string, lsn long")
     getattr(t, sink)(rows, "0:0", lsn_col="lsn")
     assert {r["k"]: r["v"] for r in t.read().collect()} == {"a": big, "b": None}
+
+
+def test_precombined_n_upserts_counts_applied_upserts(spark, tmproot):
+    """A precombined commit counts the upserts it applied, not the state
+    rows its bucket rewrite kept: 10 keys, then 1 key, into one bucket."""
+    from agr_loader_spark.lake.table import BUCKET_COL
+    from agr_loader_spark.operators.dedup import precombine_lww
+
+    t = _mk(spark, tmproot, n_buckets=1)
+
+    def commit(keys, epoch_key):
+        rows = _changes(spark, [(k, [1], 1, "FB", "U") for k in keys]) \
+            .withColumn("lsn", F.lit(int(epoch_key.split(":")[0])).cast("long")) \
+            .withColumn(BUCKET_COL, F.lit(0))
+        combined = precombine_lww(rows, key="doc_id", op_col=OP_COL, lsn_col="lsn")
+        return t.merge_arrow(combined.repartition(1), epoch_key, lsn_col="lsn",
+                             prepared=True, precombined=True)
+
+    assert commit([f"k{i}" for i in range(10)], "0:0")["n_upserts"] == 10
+    r = commit(["k3"], "1:0")
+    assert r["n_upserts"] == 1
+    assert "n_duplicates_dropped" not in r
+    assert t.read().count() == 10
+
+
+def test_fold_placement_matches_spark_hash(spark, tmproot):
+    """The in-process placement reproduces Spark's own: the numpy hash
+    equals F.hash on ints, each salt is the smallest non-negative int
+    that Spark's hash sends to its partition, and a placed changeset
+    puts bucket b in partition b % p."""
+    from agr_loader_spark.lake.table import BUCKET_COL, fold_salts, spark_hash_int
+
+    ints = spark.range(-5000, 10001).select(F.col("id").cast("int").alias("v"))
+    got = ints.select("v", F.hash("v").alias("h")).orderBy("v").toPandas()
+    assert (spark_hash_int(got["v"].to_numpy()) == got["h"].to_numpy()).all()
+
+    # per p: the first v in 0..64p-1 landing in each partition, as Spark
+    # computes it
+    probe = (
+        spark.range(1, 65).toDF("p").crossJoin(spark.range(64 * 64).toDF("v"))
+        .filter(F.col("v") < 64 * F.col("p"))
+        .groupBy("p", F.pmod(F.hash(F.col("v").cast("int")), F.col("p")).alias("t"))
+        .agg(F.min("v").alias("v"))
+        .collect()
+    )
+    want: dict[int, dict[int, int]] = {}
+    for r in probe:
+        want.setdefault(r["p"], {})[r["t"]] = r["v"]
+    for p in range(1, 65):
+        assert fold_salts(p).tolist() == [want[p][i] for i in range(p)], p
+
+    t = _mk(spark, tmproot, n_buckets=16)
+    ch = _changes(spark, [(f"d{i}", [i], 1, "FB", "U") for i in range(400)]) \
+        .withColumn("lsn", F.lit(1).cast("long"))
+    placed = t.balanced_fold_repartition(t.project_changes(ch, "lsn"), 16)
+    p = t.fold_partitions(16)
+    assert p > 1
+    seen = placed.select(BUCKET_COL, F.spark_partition_id().alias("pid")) \
+        .distinct().collect()
+    assert len({r[BUCKET_COL] for r in seen}) == 16
+    assert all(r["pid"] == r[BUCKET_COL] % p for r in seen), sorted(map(tuple, seen))

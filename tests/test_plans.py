@@ -158,30 +158,3 @@ def test_precombine_plan_adds_no_exchange_and_no_sort(spark):
     # only the bucket shuffle — the combine itself is exchange-free
     assert plan.count("Exchange") == 1, plan
     assert "SortAggregate" not in plan and "ObjectHashAggregate" not in plan, plan
-
-
-def test_precombine_exact_counts_plan_is_codegen_hashagg(spark):
-    """The exact dedup counters the combine displaced live in the
-    runner's planning pass as a two-level distinct-lsn aggregation over
-    ONLY narrow columns — it must plan as codegen HashAggregate
-    (primitive buffers) with no Expand, no ObjectHashAggregate, and no
-    payload (tokens) column in the scan."""
-    import pyspark.sql.functions as F
-
-    data = spark.createDataFrame(
-        [(0, 5, "U", "d1", [1, 2])],
-        "epoch int, event_lsn long, op string, doc_id string, tokens array<int>",
-    )
-    lvl1 = data.groupBy("epoch", F.lit(0).alias("seg"), "event_lsn").agg(
-        F.count("*").alias("copies"),
-        # int flag, NOT max(op): a string buffer demotes to SortAggregate
-        F.max(F.when(F.col("op") == "D", 1).otherwise(0)).alias("is_d"))
-    stats = lvl1.groupBy("epoch", "seg").agg(
-        F.sum("copies").alias("n_events"),
-        F.count("*").alias("n_unique"),
-        F.sum(F.when(F.col("is_d") == 0, 1).otherwise(0)).alias("n_unique_u"),
-    )
-    plan = _plan(stats)
-    assert "HashAggregate" in plan, plan
-    assert "ObjectHashAggregate" not in plan and "SortAggregate" not in plan, plan
-    assert "Expand" not in plan, plan

@@ -205,80 +205,74 @@ def test_invariants(spark, tmproot, binlog):
     assert len(keys) == len(set(keys))
 
 
-def test_precombine_replay_equivalent(spark, tmproot, binlog, oracle_df):
-    """precombine=True (map-local LWW combine before the bucket shuffle,
-    operators/dedup.py:precombine_lww) with exact_counts=True must
-    produce the byte-identical final state AND identical lineage
-    counters — n_upserts / n_deletes / exact n_duplicates_dropped /
-    offset ranges / per-bucket offsets — as the uncombined fold, on a
-    log containing re-deliveries, deletes, and mid-stream schema
-    evolution."""
-    t_pre = LakeTable.create(spark, tmproot + "/pre", TOKENS_TABLE_COLUMNS,
+@pytest.fixture(scope="module")
+def precombine_pair(spark, binlog, tmp_path_factory):
+    """The same log replayed by the default runner (map-local combine)
+    and by precombine=False (every event reaches the fold)."""
+    root = str(tmp_path_factory.mktemp("precombine"))
+    out = []
+    for name, pc in (("pre", True), ("ref", False)):
+        t = LakeTable.create(spark, f"{root}/{name}", TOKENS_TABLE_COLUMNS,
                              key=TOKENS_MERGE_KEY, n_buckets=16)
-    ReplayRunner(spark, t_pre, source_path=binlog, precombine=True,
-                 exact_counts=True).run()
+        ReplayRunner(spark, t, source_path=binlog, precombine=pc).run()
+        out.append(t)
+    return out
+
+
+def _commit_lineage(t):
+    return {l["epoch_key"]: l for l in t.lineage() if "n_upserts" in l}
+
+
+def test_precombine_replay_equivalent(precombine_pair, oracle_df):
+    """The default precombine run (map-local LWW combine before the
+    bucket shuffle, operators/dedup.py:precombine_lww) produces the
+    byte-identical final state and the same exact lineage fields —
+    n_deletes / offset ranges / touched buckets / per-bucket offsets —
+    as precombine=False, on a log containing re-deliveries, deletes, and
+    mid-stream schema evolution."""
+    t_pre, t_ref = precombine_pair
     _assert_state_equals_oracle(t_pre, oracle_df)
-
-    t_ref = LakeTable.create(spark, tmproot + "/ref", TOKENS_TABLE_COLUMNS,
-                             key=TOKENS_MERGE_KEY, n_buckets=16)
-    ReplayRunner(spark, t_ref, source_path=binlog, precombine=False).run()
-    lp = {l["epoch_key"]: l for l in t_pre.lineage() if "n_upserts" in l}
-    lr = {l["epoch_key"]: l for l in t_ref.lineage() if "n_upserts" in l}
-    assert lp.keys() == lr.keys()
-    checked_dups = 0
-    for k in lp:
-        for f in ("n_upserts", "n_deletes", "n_duplicates_dropped",
-                  "min_lsn", "max_lsn", "n_events", "buckets_touched",
-                  "per_bucket_offsets"):
-            assert lp[k][f] == lr[k][f], (k, f, lp[k][f], lr[k][f])
-        checked_dups += lp[k]["n_duplicates_dropped"]
-    assert checked_dups > 0  # the log really contains re-deliveries
-
-
-def test_precombine_default_approx_counters(spark, tmproot, binlog,
-                                            oracle_df):
-    """Default precombine mode (exact_counts=False): final state is still
-    byte-identical to the oracle, offset/per-bucket lineage stays exact,
-    and the dedup counters appear as *_approx keys (HLL estimates from
-    the planning agg — within a few % of truth) with NO false-zero
-    n_duplicates_dropped recorded; n_upserts counts applied upserts."""
-    t = LakeTable.create(spark, tmproot + "/preapx", TOKENS_TABLE_COLUMNS,
-                         key=TOKENS_MERGE_KEY, n_buckets=16)
-    ReplayRunner(spark, t, source_path=binlog, precombine=True).run()
-    _assert_state_equals_oracle(t, oracle_df)
-
-    t_ref = LakeTable.create(spark, tmproot + "/refapx", TOKENS_TABLE_COLUMNS,
-                             key=TOKENS_MERGE_KEY, n_buckets=16)
-    ReplayRunner(spark, t_ref, source_path=binlog, precombine=False).run()
-    lp = {l["epoch_key"]: l for l in t.lineage() if "n_upserts" in l}
-    lr = {l["epoch_key"]: l for l in t_ref.lineage() if "n_upserts" in l}
+    _assert_state_equals_oracle(t_ref, oracle_df)
+    lp, lr = _commit_lineage(t_pre), _commit_lineage(t_ref)
     assert lp.keys() == lr.keys()
     for k in lp:
-        # exact fields are mode-independent
         for f in ("n_deletes", "min_lsn", "max_lsn", "n_events",
                   "buckets_touched", "per_bucket_offsets"):
-            assert lp[k][f] == lr[k][f], (k, f)
+            assert lp[k][f] == lr[k][f], (k, f, lp[k][f], lr[k][f])
+    # the uncombined fold counts re-deliveries exactly
+    assert sum(l["n_duplicates_dropped"] for l in lr.values()) > 0
+
+
+def test_precombine_default_approx_counters(precombine_pair):
+    """Default precombine mode: the dedup counters appear as *_approx
+    keys (HLL estimates from the planning agg — within a few % of the
+    exact counts of precombine=False) with NO false-zero
+    n_duplicates_dropped recorded; n_upserts counts applied upserts,
+    at most the segment's distinct U events."""
+    t_pre, t_ref = precombine_pair
+    lp, lr = _commit_lineage(t_pre), _commit_lineage(t_ref)
+    for k in lp:
         # the fold cannot measure dups post-collapse: no false zero
         assert "n_duplicates_dropped" not in lp[k], k
         # the dup estimate is n_events - HLL(distinct lsn): its error is
-        # relative to SEGMENT SIZE (3 sigma of the default rsd=0.02),
-        # not to the dup count — honest bound, see runner._plan
+        # relative to SEGMENT SIZE (3 sigma of rsd=0.02), not to the dup
+        # count — honest bound, see runner.PLAN_HLL_RSD
         approx = lp[k]["n_duplicates_dropped_approx"]
         exact = lr[k]["n_duplicates_dropped"]
         assert abs(approx - exact) <= max(5, int(0.06 * lp[k]["n_events"])), \
             (k, approx, exact, lp[k]["n_events"])
-        # applied upserts: winner rows written this commit
-        assert lp[k]["n_upserts"] >= 0
+        # applied upserts: one per winning U key, never kept state rows
+        assert 0 <= lp[k]["n_upserts"] <= lr[k]["n_upserts"], k
         assert lp[k]["n_upserts_approx"] > 0
 
 
 def test_precombine_exact_dups_across_partitions(spark, tmproot):
     """A re-delivered (key, lsn) pair split across DIFFERENT map
     partitions, with a later event for the same key sharing a partition
-    with one copy: exact_counts=True must still count the duplicate
-    exactly once-dropped via the planning pass's distinct-lsn
-    aggregation (a per-partition count after the local collapse would
-    undercount — the loser copy is gone before any global view)."""
+    with one copy. Exact counters come from precombine=False: every copy
+    reaches the key's bucket fold, which counts the duplicate exactly
+    once (a map-local collapse would have dropped the loser copy before
+    any global view)."""
     rows = [
         # partition 0: dup copy of (d1, 5) + the key's winner (lsn 9)
         ("d1", [1, 2], 2, "s", "U", 5, 0),
@@ -303,9 +297,7 @@ def test_precombine_exact_dups_across_partitions(spark, tmproot):
     )
     table = LakeTable.create(spark, tmproot + "/xp", TOKENS_TABLE_COLUMNS,
                              key=TOKENS_MERGE_KEY, n_buckets=4)
-    runner = ReplayRunner(spark, table, source_df=df, precombine=True,
-                          exact_counts=True)
-    runner.run()
+    ReplayRunner(spark, table, source_df=df, precombine=False).run()
     lin = [l for l in table.lineage() if "n_upserts" in l]
     assert len(lin) == 1
     # 4 rows, distinct (key, lsn) = {(d1,5),(d1,9),(d2,6)} -> exactly 1 dup
