@@ -29,8 +29,13 @@ engine operator per the build brief):
                verification (chunk count derived from max_hamming so
                the pigeonhole completeness guarantee always holds).
 
-All shingling/hashing is JVM-side (split/explode/xxhash64); SimHash bit
-folding is a vectorized pandas UDF over grouped hash arrays.
+Every n-gram consumer (the Jaccard sets and join paths, MinHash and
+both contamination sides) gets its shingles from one vectorized kernel,
+`shingle.shingle_sets`: a single mapInArrow step that splits, joins,
+dedups and xxhash64-hashes each doc's word n-grams with Arrow/numpy,
+bit-identical to Spark's expressions. SimHash's word hashes stay a Spark
+projection (the token hash is pluggable); its bit folding is a vectorized
+pandas UDF over grouped hash arrays.
 """
 
 from __future__ import annotations
@@ -39,13 +44,15 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 from pyspark.sql.functions import pandas_udf
 
 from ..zipcache import keep_zip_directory_cache
+from .shingle import minhash_seeds, shingle_sets, xxhash64
 
 
 # ------------------------------------------------------------------ exact
@@ -61,49 +68,15 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 
 
 # ------------------------------------------------------------- shingling
-def _gram_array(text_col: str, n: int):
-    """Word n-gram array expression, SAFE for sub-n-token documents: a
-    doc with fewer than n tokens has no n-grams, so it gets an EMPTY
-    array (Spark's `sequence(0, negative)` would otherwise produce a
-    descending range and `slice(toks, 0, n)` throws at runtime — a
-    short doc is a certainty at corpus scale). The DuckDB oracle's
-    `range(1, len(t))` is likewise empty for len(t) < 2."""
-    toks = F.split(F.trim(F.col(text_col)), "\\s+")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-    )
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
              n: int = 2) -> DataFrame:
     """Distinct word n-gram shingles per doc: (id, shingle). Docs with
     fewer than n tokens contribute no rows (explode of empty array)."""
-    # array_distinct already dedups within a doc, so (id, shingle) is
-    # unique with no extra shuffle
-    return docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(_gram_array(text_col, n))).alias("shingle"),
+    # the kernel already dedups within a doc, so (id, shingle) is unique
+    # with no extra shuffle
+    return shingle_sets(docs, text_col, id_col, n, grams=True).select(
+        F.col(id_col), F.explode("__grams").alias("shingle")
     )
-
-
-def _shingle_sets(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    """One row per doc: (id, sh_set: array<bigint> of distinct shingle
-    hashes, n_sh). Computed entirely in the scan projection — no
-    explode, no shuffle (xxhash64 collisions within/across 50-shingle
-    docs are ~2^-64-scale, the same digest-equality stance exact_dedup
-    takes with md5). Unordered: array_intersect and explode consumers
-    don't need a sort, and the per-doc n log n shows up at corpus scale.
-    Sub-n-token docs get an empty set (n_sh = 0) and thus never pair."""
-    return docs.select(
-        F.col(id_col),
-        F.transform(
-            F.array_distinct(_gram_array(text_col, n)), lambda s: F.xxhash64(s)
-        ).alias("sh_set"),
-    ).withColumn("n_sh", F.size("sh_set"))
 
 
 def _verify_pairs(
@@ -187,11 +160,15 @@ def _cheap_dense_pregate(docs: DataFrame, text_col: str) -> bool:
     token count <= (chars+1)/2, so sum(length(text))//2 caps the
     collected refs. One cheap columnar scan instead of a full
     split/distinct/hash pass; conservative (may fall back to the join
-    path on long-word corpora near the cap, never over-collects)."""
-    st = docs.select(
-        F.count("*").alias("n"),
-        F.sum(F.length(F.col(text_col))).alias("chars"),
-    ).first()
+    path on long-word corpora near the cap, never over-collects). The
+    sums ride a no-op write as observed metrics: one job with no
+    exchange, where a global aggregate runs its map stage and its
+    result as two jobs."""
+    obs = Observation()
+    docs.select(F.length(F.col(text_col)).alias("__len")).observe(
+        obs, F.count(F.lit(1)).alias("n"), F.sum("__len").alias("chars")
+    ).write.format("noop").mode("overwrite").save()
+    st = obs.get
     n, chars = st["n"], (st["chars"] or 0)
     return n >= 2 and 0 < chars and chars // 2 <= _DENSE_COLLECT_CAP
 
@@ -257,25 +234,22 @@ def _dense_set_index(sets: DataFrame, id_col: str, pregated: bool = False):
     order = np.argsort(ids, kind="stable")
     if not np.all(order == np.arange(len(ids))):
         ids, ns = ids[order], ns[order]
-        sizes = np.diff(indptr)
-        new_flat = np.empty_like(flat)
         new_indptr = np.zeros(len(ids) + 1, dtype=np.int64)
-        np.cumsum(sizes[order], out=new_indptr[1:])
-        pos = 0
-        for k in order:
-            ln = int(sizes[k])
-            new_flat[pos:pos + ln] = flat[indptr[k]:indptr[k] + ln]
-            pos += ln
-        flat, indptr = new_flat, new_indptr
+        np.cumsum(ns, out=new_indptr[1:])
+        # entry j of sorted doc d comes from flat[indptr[order[d]] + j]
+        src = np.repeat(indptr[:-1][order] - new_indptr[:-1], ns) \
+            + np.arange(new_indptr[-1])
+        flat, indptr = flat[src], new_indptr
     return (vocab, ids, ns, indptr, flat), sets
 
 
 def _indicator_block(vocab: np.ndarray, hash_lists) -> np.ndarray:
     """(rows, V) float32 indicator matrix from an Arrow list<int64>
-    column of shingle hashes; hashes absent from vocab are ignored."""
-    la = hash_lists.combine_chunks()
-    vals = la.values.to_numpy() if len(la.values) else np.empty(0, np.int64)
-    offs = la.offsets.to_numpy().astype(np.int64)
+    array of shingle hashes; hashes absent from vocab are ignored."""
+    offs = hash_lists.offsets.to_numpy().astype(np.int64)
+    vals = (hash_lists.values.to_numpy()[offs[0]:offs[-1]]
+            if len(hash_lists.values) else np.empty(0, np.int64))
+    offs -= offs[0]
     idx = np.searchsorted(vocab, vals)
     np.clip(idx, 0, len(vocab) - 1, out=idx)
     ok = vocab[idx] == vals
@@ -332,11 +306,10 @@ def _dense_self_pairs(sets: DataFrame, index, threshold: float,
         c = tm / (1.0 + tm)
         cnb = (nb * c).astype(np.float32)
         for batch in batches:
-            tb = pa.Table.from_batches([batch])
-            bids = tb.column(0).to_numpy()
+            bids = batch.column(0).to_numpy()
             if not len(bids):
                 continue
-            a = _indicator_block(vocab, tb.column(1))
+            a = _indicator_block(vocab, batch.column(1))
             na = a.sum(axis=1, dtype=np.float64)
             cna = (na * c).astype(np.float32)
             # the broadcast column side is id-sorted and the input is
@@ -396,12 +369,20 @@ def _dense_contamination(train_sets: DataFrame, eval_index, min_common: int,
     train doc blocks against the broadcast eval indicator matrix. Train
     shingle hashes outside the eval vocabulary cannot match and are
     dropped at indicator build; n_eval_sh comes from the eval set sizes
-    (vocab-independent), so values equal the join path's exactly."""
+    (vocab-independent), so values equal the join path's exactly.
+
+    Train ids pass through Arrow untouched, so any id type works. The
+    join path groups by (train_id, eval_id), which pools every null-id
+    train doc into one train id; here their counts are summed per eval
+    doc and emitted once per task, which equals that pooling because
+    ``train_sets`` must be hash-partitioned by id (one task holds every
+    null id)."""
     vocab, ev_ids, ev_ns, indptr, flat = eval_index
     spark = train_sets.sparkSession
     bc = spark.sparkContext.broadcast((vocab, ev_ids, ev_ns, indptr, flat))
     # the join path can only ever emit pairs with at least one match
     mc = float(max(min_common, 1))
+    id_type = train_sets.schema[id_col].dataType
 
     def gen(batches):
         import pyarrow as pa
@@ -413,10 +394,19 @@ def _dense_contamination(train_sets: DataFrame, eval_index, min_common: int,
         bt = np.zeros((v, n_ev), dtype=np.float32)
         cols = np.repeat(np.arange(n_ev), np.diff(indptr))
         bt[flat, cols] = 1.0
-        schema = pa.schema([
-            ("train_id", pa.int64()), ("eval_id", pa.int64()),
-            ("n_common", pa.int64()), ("n_eval_sh", pa.int64()),
-        ])
+        null_nc, tid_type = None, None
+
+        def emit(tids, ec, nc):
+            return pa.RecordBatch.from_arrays(
+                [
+                    tids,
+                    pa.array(ev_ids[ec], pa.int64()),
+                    pa.array(nc.astype(np.int64)),
+                    pa.array(ev_ns[ec].astype(np.int64)),
+                ],
+                names=["train_id", "eval_id", "n_common", "n_eval_sh"],
+            )
+
         # cap emitted RecordBatch rows: a dense train-block x eval
         # extraction can hold millions of surviving pairs, and an
         # unbounded Arrow IPC batch blows the JVM reader's direct
@@ -424,31 +414,34 @@ def _dense_contamination(train_sets: DataFrame, eval_index, min_common: int,
         # at a 500k-doc corpus). 512k rows ~= 16 MB per batch.
         emit_cap = 1 << 19
         for batch in batches:
-            tb = pa.Table.from_batches([batch])
-            tids = tb.column(0).to_numpy()
-            a = _indicator_block(vocab, tb.column(1))
+            tids = batch.column(0)
+            tid_type = tids.type
+            nulls = (tids.is_null().to_numpy(zero_copy_only=False)
+                     if tids.null_count else None)
+            a = _indicator_block(vocab, batch.column(1))
             for lo in range(0, a.shape[0], 2048):
                 hi = min(lo + 2048, a.shape[0])
                 nc = a[lo:hi] @ bt
+                if nulls is not None and nulls[lo:hi].any():
+                    part = nc[nulls[lo:hi]].sum(axis=0, dtype=np.float64)
+                    null_nc = part if null_nc is None else null_nc + part
+                    nc[nulls[lo:hi]] = 0.0
                 ra, cb = np.nonzero(nc >= mc)
-                if len(ra) == 0:
-                    continue
                 for e0 in range(0, len(ra), emit_cap):
-                    e1 = min(e0 + emit_cap, len(ra))
-                    er, ec = ra[e0:e1], cb[e0:e1]
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(tids[lo + er], pa.int64()),
-                            pa.array(ev_ids[ec], pa.int64()),
-                            pa.array(nc[er, ec].astype(np.int64)),
-                            pa.array(ev_ns[ec].astype(np.int64)),
-                        ],
-                        schema=schema,
-                    )
+                    er, ec = ra[e0:e0 + emit_cap], cb[e0:e0 + emit_cap]
+                    yield emit(tids.take(pa.array(lo + er)), ec, nc[er, ec])
+        if null_nc is not None:
+            ec = np.flatnonzero(null_nc >= mc)
+            if len(ec):
+                yield emit(pa.nulls(len(ec), tid_type), ec, null_nc[ec])
 
-    out = train_sets.select(F.col(id_col), "sh_set").mapInArrow(
-        gen, "train_id long, eval_id long, n_common long, n_eval_sh long"
-    )
+    schema = T.StructType([
+        T.StructField("train_id", id_type),
+        T.StructField("eval_id", T.LongType()),
+        T.StructField("n_common", T.LongType()),
+        T.StructField("n_eval_sh", T.LongType()),
+    ])
+    out = train_sets.select(F.col(id_col), "sh_set").mapInArrow(gen, schema)
     return out.select(
         "train_id", "eval_id", "n_common",
         F.round(F.col("n_common") / F.col("n_eval_sh"), 6).alias("containment"),
@@ -484,14 +477,13 @@ def ngram_jaccard_pairs(
     `max_df` keeps the join path (its stop-shingle drop is defined on
     the exploded table).
     """
-    # spread the (expensive, interpreted) shingle projection BEFORE it
-    # runs: bench-scale inputs are one or two scan partitions, and every
-    # consumer below recomputes this subtree — hash-partitioning by doc
-    # id here also pre-establishes the partitioning the join path's
-    # probe side wants (guide §2.4: share one exchange)
+    # spread the shingle kernel BEFORE it runs: bench-scale inputs are
+    # one or two scan partitions, and every consumer below recomputes
+    # this subtree — hash-partitioning by doc id here also
+    # pre-establishes the partitioning the join path's probe side wants
+    # (guide §2.4: share one exchange)
     p = 2 * docs.sparkSession.sparkContext.defaultParallelism
-    sets = _shingle_sets(docs.repartition(p, F.col(id_col)),
-                         text_col, id_col, n)
+    sets = shingle_sets(docs.repartition(p, F.col(id_col)), text_col, id_col, n)
     if max_df is None:
         # two-stage gate: the cheap char-count bound skips the exact
         # probe when it can prove the collect is small; when it CANNOT
@@ -561,56 +553,30 @@ def ngram_jaccard_pairs(
 
 
 # --------------------------------------------------------------- minhash
-def _dense_minhash_signatures(
-    docs: DataFrame, num_hashes: int, n: int, text_col: str, id_col: str,
-):
-    """Dense-vocab fast path for minhash_signatures, bit-identical by
-    construction: the per-(i, shingle) hash values are computed by the
-    SAME JVM xxhash64 expressions as the aggregation path — but once per
-    DISTINCT shingle instead of once per (doc, shingle) occurrence — and
-    the per-doc min-fold is a vectorized gather+reduceat in numpy over
-    the broadcast (vocab_hash -> hash-vector) table. On the bench corpus
-    this turns 64 min-aggregates over the exploded shingle table (165M
-    string hashes + agg updates behind one shuffle) into one shuffle-free
-    columnar pass. Returns None when the vocabulary cap trips or ids are
-    not int64 (caller keeps the aggregation path)."""
-    if os.environ.get("SPARK_JACCARD_DENSE", "1") == "0":
-        return None
-    if not isinstance(docs.schema[id_col].dataType, T.LongType):
-        return None
-    spark = docs.sparkSession
-    p = 2 * spark.sparkContext.defaultParallelism
-    # ONE shingle projection for the whole pipeline: per-doc distinct
-    # gram STRINGS, spread and materialized once; the vocab probe
-    # (explode+distinct), the hashed sets (transform+xxhash64 — the
-    # identical expressions _shingle_sets uses) and the verify joins all
-    # derive from it instead of re-scanning and re-splitting the raw
-    # docs per consumer
-    grams_df = docs.repartition(p, F.col(id_col)).select(
-        F.col(id_col),
-        F.array_distinct(_gram_array(text_col, n)).alias("__grams"),
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    rows = (
-        grams_df.select(F.explode("__grams").alias("shingle")).distinct()
-        .select(
-            F.xxhash64("shingle").alias("h"),
-            *[
-                F.xxhash64(F.lit(i), F.col("shingle")).alias(f"h{i}")
-                for i in range(num_hashes)
-            ],
-        )
+def _dense_minhash_signatures(sets: DataFrame, num_hashes: int, id_col: str):
+    """Dense-vocab fast path for MinHash signatures over a materialized
+    ``shingle_sets(..., grams=True)`` frame, bit-identical by
+    construction: the per-(i, shingle) hash values are computed once per
+    DISTINCT shingle (the numpy `xxhash64`, pinned to Spark's
+    ``xxhash64(lit(i), s)``) instead of once per (doc, shingle)
+    occurrence, and the per-doc min-fold is a vectorized gather+reduceat
+    in numpy over the broadcast (vocab_hash -> hash-vector) table. On the
+    bench corpus this turns 64 min-aggregates over the exploded shingle
+    table (165M string hashes + agg updates behind one shuffle) into one
+    shuffle-free columnar pass. Returns None when the vocabulary cap
+    trips (the caller keeps the aggregation path)."""
+    vocab = [
+        r[0] for r in sets.select(F.explode("__grams")).distinct()
         .take(_DENSE_VOCAB_CAP + 1)
-    )
-    if len(rows) > _DENSE_VOCAB_CAP or not rows:
+    ]
+    if len(vocab) > _DENSE_VOCAB_CAP or not vocab:
         return None
-    vh = np.array([r["h"] for r in rows], dtype=np.int64)
-    hv = np.array(
-        [[r[f"h{i}"] for i in range(num_hashes)] for r in rows],
-        dtype=np.int64,
-    )
+    va = pa.array(vocab, pa.string())
+    vh = xxhash64(va)
     order = np.argsort(vh)
-    vh, hv = vh[order], hv[order]
-    bc = spark.sparkContext.broadcast((vh, hv))
+    vh = vh[order]
+    hv = np.ascontiguousarray(xxhash64(va, minhash_seeds(num_hashes)).T[order])
+    bc = sets.sparkSession.sparkContext.broadcast((vh, hv))
     nh = num_hashes
 
     def gen(batches):
@@ -650,47 +616,23 @@ def _dense_minhash_signatures(
                 schema=schema,
             )
 
-    # hashed sets derived from the materialized gram strings — identical
-    # values to _shingle_sets (same transform/xxhash64 expressions),
-    # no second pass over the raw docs
-    sets = grams_df.select(
-        F.col(id_col),
-        F.transform(F.col("__grams"), lambda s: F.xxhash64(s)).alias("sh_set"),
-    ).withColumn("n_sh", F.size("sh_set"))
-    sig = sets.select(
+    return sets.select(
         F.col(id_col).alias("__id"), "sh_set"
     ).mapInArrow(gen, "__id long, sig array<bigint>").select(
         F.col("__id").alias(id_col), "sig"
     )
-    return sig, sets
 
 
-def minhash_signatures(
-    docs: DataFrame, num_hashes: int = 64, n: int = 2,
-    text_col: str = "text", id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, sig: array<bigint>) — sig[i] = min over the doc's string
-    shingles s of xxhash64(i, s). Shape: explode distinct shingles,
-    repartition to spread the hash CPU, then ONE groupBy(id) with
-    num_hashes codegen'd min-aggregates assembled into the signature
-    array. (A nested transform-of-transform over per-doc hash sets —
-    "no explode, no shuffle" — was measured SLOWER: it runs
-    interpreted, outside whole-stage codegen; see the note below.)
-
-    Dense-vocab corpora take `_dense_minhash_signatures` (identical
-    values, one hash per (i, distinct shingle) instead of per
-    occurrence); everything else runs the aggregation below."""
-    fast = _dense_minhash_signatures(docs, num_hashes, n, text_col, id_col)
-    if fast is not None:
-        return fast[0]
-    # string shingles + 64 codegen'd min-aggs. Measured alternatives on
-    # sf0.1 (warm, 3 reps): nested transform-of-transform over per-doc
-    # hash sets runs interpreted (~6s); pre-hashed long shingles make the
-    # projection pay twice (~5.9s); this shape is 3.9s. The repartition
-    # spreads the per-row hash CPU when the input is one small file
-    # (single scan partition).
-    p = 2 * docs.sparkSession.sparkContext.defaultParallelism
-    sh = shingles(docs, text_col, id_col, n).repartition(p)
+def _agg_minhash_signatures(sets: DataFrame, num_hashes: int,
+                            id_col: str) -> DataFrame:
+    """The general signature path: explode the string shingles of a
+    ``shingle_sets(..., grams=True)`` frame, repartition to spread the
+    hash CPU, then ONE groupBy(id) with num_hashes codegen'd
+    min-aggregates assembled into the signature array (a nested
+    transform over per-doc hash sets runs interpreted, outside
+    whole-stage codegen, and measured ~1.5x slower on sf0.1)."""
+    p = 2 * sets.sparkSession.sparkContext.defaultParallelism
+    sh = sets.select(F.col(id_col), F.explode("__grams").alias("shingle")).repartition(p)
     aggs = [
         F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
         for i in range(num_hashes)
@@ -699,6 +641,40 @@ def minhash_signatures(
     return sig.select(
         id_col, F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
     )
+
+
+def _minhash(docs: DataFrame, num_hashes: int, n: int, text_col: str,
+             id_col: str):
+    """(sig, sets): signatures and the ``shingle_sets(..., grams=True)``
+    frame they came from (for verification). The dense path is tried
+    once, only for int64 ids whose corpus passes `_cheap_dense_pregate`;
+    it materializes the sets first so the vocab probe, the signature
+    fold and the caller's verify joins share ONE kernel pass. Its
+    fallback goes straight to the aggregation path over those same
+    sets."""
+    p = 2 * docs.sparkSession.sparkContext.defaultParallelism
+    sets = shingle_sets(docs.repartition(p, F.col(id_col)), text_col, id_col, n,
+                        grams=True)
+    if (os.environ.get("SPARK_JACCARD_DENSE", "1") != "0"
+            and isinstance(docs.schema[id_col].dataType, T.LongType)
+            and _cheap_dense_pregate(docs, text_col)):
+        sets = sets.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        sig = _dense_minhash_signatures(sets, num_hashes, id_col)
+        if sig is not None:
+            return sig, sets
+    return _agg_minhash_signatures(sets, num_hashes, id_col), sets
+
+
+def minhash_signatures(
+    docs: DataFrame, num_hashes: int = 64, n: int = 2,
+    text_col: str = "text", id_col: str = "doc_id",
+) -> DataFrame:
+    """(id, sig: array<bigint>) — sig[i] = min over the doc's string
+    shingles s of xxhash64(i, s). Dense-vocab corpora take
+    `_dense_minhash_signatures` (identical values, one hash per (i,
+    distinct shingle) instead of per occurrence); everything else runs
+    `_agg_minhash_signatures`. Docs without shingles get no row."""
+    return _minhash(docs, num_hashes, n, text_col, id_col)[0]
 
 
 def minhash_lsh_pairs(
@@ -718,17 +694,10 @@ def minhash_lsh_pairs(
     ngram_jaccard_pairs up to LSH recall.
     """
     r = num_hashes // bands
-    fast = _dense_minhash_signatures(docs, num_hashes, n, text_col, id_col)
-    if fast is not None:
-        sig, sets = fast
-        # the banding self-join and the verify joins each consume their
-        # input twice; signature rows are ~0.5 KB/doc, so materialize
-        # once instead of recomputing the whole pipeline per join side
-        sig = sig.localCheckpoint(eager=True,
-                                  storageLevel=StorageLevel.DISK_ONLY)
-    else:
-        sig = minhash_signatures(docs, num_hashes, n, text_col, id_col)
-        sets = _shingle_sets(docs, text_col, id_col, n)
+    # the banding self-join reads sig on both sides: each side re-runs
+    # the numpy min-fold over the materialized sets, cheaper than a
+    # checkpoint job of its own
+    sig, sets = _minhash(docs, num_hashes, n, text_col, id_col)
     bands_df = sig.select(
         F.col(id_col),
         F.posexplode(
@@ -905,7 +874,7 @@ def contamination_pairs(
     broadcast — the train corpus streams through a map-side hash join
     with NO shuffle of the big side; the only shuffle is the per-pair
     count aggregation, bounded by the number of matches. Sub-n-token
-    docs contribute no shingles on either side (the _gram_array guard).
+    docs contribute no shingles on either side.
 
     Dense-eval fast path (same rationale as the ngram_jaccard dense
     path): when the EVAL shingle vocabulary is small, the per-match
@@ -915,10 +884,10 @@ def contamination_pairs(
     shingle table, and no per-match row ever exists. The train side
     still never shuffles its text — only its compact per-doc hash sets.
     """
+    ev_sets = None
     if broadcast_eval and os.environ.get("SPARK_JACCARD_DENSE", "1") != "0":
         p = 2 * train.sparkSession.sparkContext.defaultParallelism
-        ev_sets = _shingle_sets(eval_docs.repartition(p),
-                                text_col, id_col, n)
+        ev_sets = shingle_sets(eval_docs.repartition(p), text_col, id_col, n)
         index, ev_sets = _dense_set_index(
             ev_sets, id_col, pregated=_cheap_dense_pregate(eval_docs, text_col)
         )
@@ -929,16 +898,19 @@ def contamination_pairs(
         if index is not None:
             # spread the train-side shingle projection (bench inputs are
             # 1-2 scan partitions; at scale the scan parallelism covers
-            # this and the repartition moves only compact text rows once)
+            # this and the repartition moves only compact text rows once);
+            # by id, so every null-id train doc meets in one task
             return _dense_contamination(
-                _shingle_sets(train.repartition(p), text_col, id_col, n),
+                shingle_sets(train.repartition(p, F.col(id_col)), text_col, id_col, n),
                 index, min_common, id_col,
             )
-    tr = shingles(train, text_col, id_col, n).select(
-        F.col(id_col).alias("train_id"), F.xxhash64("shingle").alias("h")
+    if ev_sets is None:
+        ev_sets = shingle_sets(eval_docs, text_col, id_col, n)
+    tr = shingle_sets(train, text_col, id_col, n).select(
+        F.col(id_col).alias("train_id"), F.explode("sh_set").alias("h")
     )
-    ev_sh = shingles(eval_docs, text_col, id_col, n).select(
-        F.col(id_col).alias("eval_id"), F.xxhash64("shingle").alias("h")
+    ev_sh = ev_sets.select(
+        F.col(id_col).alias("eval_id"), F.explode("sh_set").alias("h")
     )
     ev_sz = ev_sh.groupBy("eval_id").agg(F.count("*").alias("n_eval_sh"))
     if broadcast_eval:
