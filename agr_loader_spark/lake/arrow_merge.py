@@ -1,6 +1,8 @@
 """Arrow-native state-colocated MERGE — the engine's one commit fold
 (every copy-on-write commit of LakeTable and every merge-on-read delta
-append goes through make_bucket_fold below).
+append goes through make_bucket_fold below) and its one LWW kernel
+(``lww_first``), which also resolves merge-on-read buckets for
+``LakeTable.read`` (read_bucket_state).
 
 A join-based merge expresses the upsert as winners-agg + semi-join +
 full-outer join + repartition: ~8 stages per micro-batch, and at
@@ -17,7 +19,8 @@ cores). This module collapses the whole merge into TWO stages:
            - reads the bucket's CURRENT state parquet directly with
              pyarrow (the state never crosses the JVM at all),
            - projects old-schema files onto the current schema by field
-             id (rename/null-fill/widen — Iceberg-style),
+             id (rename/null-fill/widen — Iceberg-style), and resolves
+             merge-on-read delta files with the same LWW kernel,
            - LWW-folds the batch: sort by (key, lsn desc), keep the first
              row per key (exact (key, lsn) re-delivery dedup is free
              because bucket co-location puts all copies in one task),
@@ -108,32 +111,6 @@ PHASE_COLS = ("t_read", "t_lww", "t_write", "rows_in", "rows_out", "bytes_writte
 _MANIFEST_ARROW = pa.schema([pa.field(n, arrow_type(t)) for n, t in _MANIFEST_FIELDS])
 
 
-def read_bucket_state(
-    files: list[dict],
-    schema_versions: dict[int, list],
-    current: list,
-    root: str,
-) -> pa.Table | None:
-    """Read a bucket's parquet files, projecting each onto the current
-    schema by field id (rename / null-fill / widen)."""
-    out_schema = arrow_schema(current)
-    tables = []
-    for fe in files:
-        t = pq.read_table(os.path.join(root, fe["path"]))
-        old_cols = {c.id: c for c in schema_versions[fe["schema_version"]]}
-        arrays = []
-        for c in current:
-            o = old_cols.get(c.id)
-            if o is None:
-                arrays.append(pa.nulls(len(t), arrow_type(c.type)))
-            else:
-                arrays.append(t.column(o.name).cast(arrow_type(c.type)))
-        tables.append(pa.Table.from_arrays(arrays, schema=out_schema))
-    if not tables:
-        return None
-    return pa.concat_tables(tables)
-
-
 def _repeats(col: pa.ChunkedArray) -> np.ndarray:
     """Per row of a sorted column: does it equal the previous row's
     value? Nulls equal nulls (they sort together)."""
@@ -145,6 +122,58 @@ def _repeats(col: pa.ChunkedArray) -> np.ndarray:
     same = pc.or_(pc.fill_null(pc.equal(cur, prev), False),
                   pc.and_(pc.is_null(cur), pc.is_null(prev)))
     return np.concatenate([[False], same.to_numpy(zero_copy_only=False)])
+
+
+def lww_first(t: pa.Table, key: str, ranks: list[str]) -> tuple[pa.Table, np.ndarray]:
+    """The LWW kernel: sort ``t`` by key ascending, then by each rank
+    column descending (nulls last), and mark the first row of each key
+    — its winner. Returns the sorted table and that mask."""
+    sort_keys = [(key, "ascending")] + [(r, "descending") for r in ranks]
+    t = t.take(pc.sort_indices(t, sort_keys=sort_keys, null_placement="at_end"))
+    return t, ~_repeats(t[key])
+
+
+def read_bucket_state(
+    files: list[dict],
+    schema_versions: dict[int, list],
+    current: list,
+    root: str,
+    key: str,
+    op_col: str,
+) -> pa.Table | None:
+    """A bucket's live rows under the current schema. Each file is
+    projected by field id (rename / null-fill / widen). When the bucket
+    carries merge-on-read delta files, LWW resolves the whole file list
+    with ``lww_first``: base rows rank as (__lsn, __seq) = (-1, -1), so
+    any delta event beats them and later commits break (key, lsn) ties;
+    only winners whose op is 'U' are live."""
+    has_delta = any(fe.get("kind") == "delta" for fe in files)
+    names = [c.name for c in current]
+    tables = []
+    for fe in files:
+        t = pq.read_table(os.path.join(root, fe["path"]))
+        old_cols = {c.id: c for c in schema_versions[fe["schema_version"]]}
+        arrays = []
+        for c in current:
+            o = old_cols.get(c.id)
+            if o is None:
+                arrays.append(pa.nulls(len(t), arrow_type(c.type)))
+            else:
+                arrays.append(t.column(o.name).cast(arrow_type(c.type)))
+        if fe.get("kind") == "delta":
+            arrays += [t[op_col], t[DELTA_LSN], t[DELTA_SEQ]]
+        elif has_delta:
+            base_rank = pa.repeat(pa.scalar(-1, pa.int64()), len(t))
+            arrays += [pa.repeat("U", len(t)), base_rank, base_rank]
+        tables.append(pa.Table.from_arrays(
+            arrays, names=names + [op_col, DELTA_LSN, DELTA_SEQ] if has_delta else names))
+    if not tables:
+        return None
+    state = pa.concat_tables(tables)
+    if not has_delta:
+        return state
+    state, first = lww_first(state, key, [DELTA_LSN, DELTA_SEQ])
+    return state.filter(first & _mask(pc.equal(state[op_col], "U"))).select(names)
 
 
 def _mask(cond) -> np.ndarray:
@@ -202,11 +231,12 @@ def make_bucket_fold(
       as tombstone rows, are written as a DELTA file carrying
       ``__op``/``__lsn``/``__seq`` (``seq`` = the committing snapshot
       id, constant per file, breaks (key, lsn) ties across commits).
-      LWW across base+deltas resolves at read time by (lsn, seq) — see
-      LakeTable.merge_delta / _read_mor — and compaction collapses a
-      bucket back to a single base file. This is the high-commit-rate
-      CDC sink shape (Hudi MOR / Paimon LSM): O(batch) writes with zero
-      read amplification, paid for by a merge step on read.
+      LWW across base+deltas resolves wherever the bucket's state is
+      read (read_bucket_state: LakeTable.read and every copy-on-write
+      fold, compact() included, which writes the bucket back as one
+      base file). This is the high-commit-rate CDC sink shape (Hudi
+      MOR / Paimon LSM): O(batch) writes with zero read amplification,
+      paid for by a merge step on read.
 
     Rows with a null key are dropped (they name no row). A batch row
     outranks its key's state row whatever its lsn.
@@ -226,7 +256,6 @@ def make_bucket_fold(
         out_schema = pa.schema(list(out_schema) + [
             pa.field(op_col, pa.string()), pa.field(DELTA_LSN, pa.int64()),
             pa.field(DELTA_SEQ, pa.int64())])
-    sort_keys = [(key, "ascending"), (lsn_col, "descending")]
 
     def fold_bucket(bucket: int, rows: pa.Table) -> dict:
         lsns = rows[lsn_col]
@@ -234,20 +263,17 @@ def make_bucket_fold(
         b_max_lsn = pc.max(lsns).as_py()
 
         t0 = time.perf_counter()
-        state = None
-        if mode != "delta":
-            state = read_bucket_state(bucket_files.get(bucket, []), schema_versions,
-                                      current, root)
+        # a delta commit passes no bucket files: the state is never read
+        state = read_bucket_state(bucket_files.get(bucket, []), schema_versions,
+                                  current, root, key, op_col)
         t1 = time.perf_counter()
         # LWW: after the sort the first row of each key carries its max
         # lsn; a repeated (key, lsn) is a re-delivered event
-        rows = rows.take(pc.sort_indices(rows, sort_keys=sort_keys,
-                                         null_placement="at_end"))
-        same_key = _repeats(rows[key])
-        dup = np.zeros(len(same_key), bool) if precombined \
-            else same_key & _repeats(rows[lsn_col])
+        rows, first = lww_first(rows, key, [lsn_col])
+        dup = np.zeros(len(first), bool) if precombined \
+            else ~first & _repeats(rows[lsn_col])
         is_u = _mask(pc.equal(rows[op_col], "U"))
-        win_mask = ~same_key & _mask(pc.is_valid(rows[key]))
+        win_mask = first & _mask(pc.is_valid(rows[key]))
         win = rows.filter(win_mask)
         win_u, win_d = is_u[win_mask], _mask(pc.equal(win[op_col], "D"))
         if mode == "delta":

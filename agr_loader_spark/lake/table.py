@@ -35,13 +35,17 @@ Scale design (the part that must hold at 10^10 events / 100 TB):
   writes the new bucket file — the state side never shuffles, like an
   Iceberg storage-partitioned join, and each bucket's data is bounded
   (state_size / n_buckets);
+- merge-on-read delta files resolve per bucket with the fold's own LWW
+  kernel (arrow_merge.read_bucket_state), in ``read`` and in every
+  copy-on-write fold, ``compact`` included;
 - schema evolution is metadata-only (field-id mapping, no data rewrite),
   exactly like Iceberg: old files are read through a projection that
   renames/casts/nulls by field id.
 
 Single-writer per table is assumed (the runner is a sequential epoch
 loop; the reference's analog is its hard group barriers,
-src/aggregate_loader.py:188-219).
+src/aggregate_loader.py:188-219); a stale handle's commit raises
+``CommitConflict`` before it writes anything.
 """
 
 from __future__ import annotations
@@ -62,6 +66,17 @@ OP_COL = "__op"
 BUCKET_COL = "__bucket"
 MERGE_LSN = "__merge_lsn"  # constant lsn of a one-row-per-key changeset
 LINEAGE_LOG = "_lineage.jsonl"
+
+
+class CommitConflict(RuntimeError):
+    """Another handle committed since this handle's snapshot: reload the
+    table (LakeTable.load) and retry; the epoch key keeps the retry
+    exactly-once."""
+
+
+def _read_current(root: str) -> int:
+    with open(os.path.join(root, "_current")) as f:
+        return int(f.read().strip())
 
 
 def _resolve_lineage(lineage: dict | None) -> dict:
@@ -197,8 +212,7 @@ class LakeTable:
 
     @classmethod
     def load(cls, spark: SparkSession, root: str) -> "LakeTable":
-        with open(os.path.join(root, "_current")) as f:
-            sid = int(f.read().strip())
+        sid = _read_current(root)
         with open(os.path.join(root, "snapshots", f"{sid}.json")) as f:
             return cls(spark, root, json.load(f))
 
@@ -218,6 +232,9 @@ class LakeTable:
     def columns(self, version: int | None = None) -> list[ColumnSpec]:
         v = self._m["schema_version"] if version is None else version
         return [ColumnSpec.from_json(d) for d in self._m["schema_versions"][str(v)]]
+
+    def _schema_versions(self) -> dict[int, list[ColumnSpec]]:
+        return {int(v): self.columns(int(v)) for v in self._m["schema_versions"]}
 
     def spark_schema(self):
         from pyspark.sql import types as T
@@ -316,21 +333,33 @@ class LakeTable:
         """Current state under the current schema. Old-schema files are
         projected by field id (rename/widen/null-fill) — metadata-only
         evolution, no rewrite (Iceberg-style). Buckets carrying MOR
-        delta files (merge_delta) are LWW-resolved transparently — the
-        classic merge-on-read cost, paid until compact() collapses
-        them."""
+        delta files (merge_delta) are LWW-resolved by the fold's own
+        kernel (arrow_merge.read_bucket_state), one ``mapInArrow`` task
+        per group of buckets and no shuffle, until a commit or compact()
+        collapses them."""
         cur = self.columns()
         sel_buckets = self._m["buckets"]
         if buckets is not None:
             want = {str(b) for b in buckets}
             sel_buckets = {b: fs for b, fs in sel_buckets.items() if b in want}
         if any(fe.get("kind") == "delta" for fs in sel_buckets.values() for fe in fs):
-            names = [c.name for c in cur]
-            return (
-                self._read_mor(sel_buckets, cur)
-                .filter(F.col(OP_COL) == "U")
-                .select(*names)
-            )
+            from ..zipcache import keep_zip_directory_cache
+            from .arrow_merge import read_bucket_state
+
+            # plain locals only: the task closure must not capture self
+            root, key, versions = self.root, self.key, self._schema_versions()
+            files = [fs for fs in sel_buckets.values() if fs]
+
+            def resolve(batches):  # input: indexes into ``files``
+                keep_zip_directory_cache()
+                for batch in batches:
+                    for i in batch.column(0).to_pylist():
+                        yield from read_bucket_state(files[i], versions, cur, root,
+                                                     key, OP_COL).to_batches()
+
+            p = min(len(files), self.spark.sparkContext.defaultParallelism)
+            return self.spark.range(len(files), numPartitions=p) \
+                .mapInArrow(resolve, self.spark_schema())
         by_version: dict[int, list[str]] = {}
         for files in sel_buckets.values():
             for fe in files:
@@ -355,59 +384,6 @@ class LakeTable:
         for fdf in frames[1:]:
             out = out.unionByName(fdf)
         return out
-
-    def _read_mor(self, sel_buckets: dict, cur: list) -> DataFrame:
-        """Merge-on-read resolution over base + delta files: one JVM-side
-        max_by per key ordered by (__lsn, __seq) — base rows rank as
-        (-1, -1), so any delta event beats them, later commits break
-        (key, lsn) ties. Returns current columns + __op + __lsn
-        (tombstone winners INCLUDED — callers filter or compact them).
-        One extra hash shuffle vs the base-only read: the standard MOR
-        read amplification that compact() amortizes away."""
-        from .arrow_merge import DELTA_LSN, DELTA_SEQ
-
-        by_group: dict[tuple[int, str], list[str]] = {}
-        for files in sel_buckets.values():
-            for fe in files:
-                by_group.setdefault(
-                    (fe["schema_version"], fe.get("kind", "base")), []
-                ).append(os.path.join(self.root, fe["path"]))
-        names = [c.name for c in cur]
-        frames = []
-        for (v, kind), paths in sorted(by_group.items()):
-            old = {c.id: c for c in self.columns(v)}
-            raw = self.spark.read.parquet(*paths)
-            proj = []
-            for c in cur:
-                o = old.get(c.id)
-                if o is None:
-                    proj.append(F.lit(None).cast(c.type).alias(c.name))
-                else:
-                    proj.append(F.col(o.name).cast(c.type).alias(c.name))
-            if kind == "delta":
-                proj += [F.col(OP_COL), F.col(DELTA_LSN), F.col(DELTA_SEQ)]
-            else:
-                proj += [
-                    F.lit("U").alias(OP_COL),
-                    F.lit(-1).cast("long").alias(DELTA_LSN),
-                    F.lit(-1).cast("long").alias(DELTA_SEQ),
-                ]
-            frames.append(raw.select(*proj))
-        if not frames:
-            schema = self.spark_schema().add(OP_COL, "string") \
-                .add(DELTA_LSN, "long").add(DELTA_SEQ, "long")
-            empty = self.spark.createDataFrame([], schema)
-            return empty.drop(DELTA_SEQ)
-        out = frames[0]
-        for fdf in frames[1:]:
-            out = out.unionByName(fdf)
-        val = F.struct(*[F.col(n) for n in names], F.col(OP_COL), F.col(DELTA_LSN))
-        order = F.struct(F.col(DELTA_LSN), F.col(DELTA_SEQ))
-        return (
-            out.groupBy(self.key)
-            .agg(F.max_by(val, order).alias("__w"))
-            .select("__w.*")
-        )
 
     # ---------------------------------------------------------------- merge
     def merge(
@@ -541,7 +517,6 @@ class LakeTable:
         touched_buckets: Sequence[int] | None = None,
         prepared: bool = False,
         mode: str = "lww",  # "lww" | "insert_if_absent" | "update_only"
-        replace_state: bool = False,
         precombined: bool = False,
     ) -> dict:
         """Two-stage Arrow-native merge (see lake/arrow_merge.py) — the
@@ -554,9 +529,9 @@ class LakeTable:
         the per-key winner (arrow_merge.make_bucket_fold):
         ``'insert_if_absent'`` keeps existing rows' payloads,
         ``'update_only'`` patches matched keys only (no insert branch).
-        ``replace_state=True`` ignores the buckets' existing files and
-        rewrites each touched bucket purely from ``changes`` — the
-        compaction path, where ``changes`` IS the resolved state.
+        Touched buckets that carry merge-on-read delta files are
+        resolved in the fold and end as one base file, as after a
+        compact().
         ``precombined=True``: ``changes`` went through
         operators.dedup.precombine_lww (one winner row per key per map
         partition) — requires ``prepared=True``. The local collapse
@@ -573,7 +548,7 @@ class LakeTable:
                              "(combine + repartition happen upstream)")
         return self._commit_fold(
             changes, epoch_key, lsn_col, lineage, touched_buckets, prepared,
-            mode=mode, replace_state=replace_state, precombined=precombined,
+            mode=mode, precombined=precombined,
         )
 
     def merge_delta(
@@ -591,10 +566,12 @@ class LakeTable:
         files — existing state is never read, so ingest cost is
         O(batch) with zero read amplification and the sink scales as
         pure writes. read() resolves LWW across base+deltas by
-        (__lsn, __seq); compact() collapses buckets back to base files.
-        Same exactly-once manifest commit as merge_arrow."""
+        (__lsn, __seq); compact() and any copy-on-write commit collapse
+        touched buckets back to base files. Same exactly-once manifest
+        commit as merge_arrow."""
         return self._commit_fold(changes, epoch_key, lsn_col, lineage,
-                                 touched_buckets, prepared, mode="delta")
+                                 touched_buckets, prepared, mode="delta",
+                                 operation="merge-delta")
 
     def _commit_fold(
         self,
@@ -605,8 +582,8 @@ class LakeTable:
         touched_buckets: Sequence[int] | None,
         prepared: bool,
         mode: str,
-        replace_state: bool = False,
         precombined: bool = False,
+        operation: str = "merge-arrow",
     ) -> dict:
         """The one fold commit body: run the bucket fold over the touched
         buckets, then commit its manifests atomically and exactly once.
@@ -627,32 +604,19 @@ class LakeTable:
         if not touched:
             return self._commit_noop(epoch_key, lineage)
         delta = mode == "delta"
-        reads_state = not (delta or replace_state)
-        if reads_state and any(
-            fe.get("kind") == "delta"
-            for b in touched for fe in self._m["buckets"].get(str(b), [])
-        ):
-            # the fold reads base files only; a merge-on-read delta would
-            # be taken for live state (tombstones included)
-            raise ValueError("touched buckets carry merge-on-read delta files: "
-                             "compact() before a copy-on-write commit")
         if not prepared:
             changes = self.prepare_changes(changes, lsn_col, len(touched))
 
-        new_sid = self.snapshot_id + 1
+        m = self._child_manifest(operation, epoch_key)
+        new_sid = m["snapshot_id"]
         fold = make_bucket_fold(
             root=self.root,
             stage_rel=os.path.join("data", str(new_sid)),
             key=self.key,
             current=self.columns(),
-            schema_versions={
-                int(v): [ColumnSpec.from_json(d) for d in cols]
-                for v, cols in self._m["schema_versions"].items()
-            },
-            bucket_files={
-                int(b): fs for b, fs in self._m["buckets"].items()
-                if int(b) in set(touched)
-            } if reads_state else {},
+            schema_versions=self._schema_versions(),
+            bucket_files={} if delta else {
+                b: self._m["buckets"].get(str(b), []) for b in touched},
             op_col=OP_COL,
             lsn_col=lsn_col,
             bucket_col=BUCKET_COL,
@@ -703,9 +667,6 @@ class LakeTable:
             # happens (the bucket fold). A precombined changeset lost its
             # copies in the map-local combine: no count beats a false zero.
             lin["n_duplicates_dropped"] = sum(int(r["n_dups"]) for r in manifests)
-        operation = ("merge-delta" if delta else
-                     "compact" if replace_state else "merge-arrow")
-        m = self._child_manifest(new_sid, operation, epoch_key)
         m["buckets"] = new_buckets
         self._append_lineage(lin)
         self._commit(m)
@@ -719,37 +680,32 @@ class LakeTable:
 
     def compact(self, buckets: Sequence[int] | None = None,
                 epoch_key: str | None = None) -> dict:
-        """Collapse MOR delta files back to one base file per bucket:
-        resolve LWW once (the same _read_mor the readers use — tombstone
-        winners included so deleted keys vanish physically), then
-        rewrite the touched buckets from the resolved rows via the COW
-        fold with ``replace_state=True``. No-op if the selected buckets
+        """Collapse MOR delta files back to one base file per bucket: a
+        copy-on-write fold commit over the delta-carrying buckets that
+        carries no live batch rows — one null-key marker row per bucket,
+        which the fold drops — so each bucket's resolving state read
+        (arrow_merge.read_bucket_state) becomes its single base file and
+        tombstoned keys vanish physically. No-op if the selected buckets
         carry no deltas. The maintenance analog of Iceberg/Hudi
         compaction; run it when read amplification (delta files per
         bucket) exceeds the read-path budget."""
-        from .arrow_merge import DELTA_LSN
-
-        sel: dict[str, list] = {}
         want = None if buckets is None else {int(b) for b in buckets}
-        for b, fs in self._m["buckets"].items():
-            if want is not None and int(b) not in want:
-                continue
-            if any(fe.get("kind") == "delta" for fe in fs):
-                sel[b] = fs
-        if not sel:
+        touched = sorted(
+            int(b) for b, fs in self._m["buckets"].items()
+            if (want is None or int(b) in want)
+            and any(fe.get("kind") == "delta" for fe in fs)
+        )
+        if not touched:
             return {"skipped": True, "reason": "no delta files",
                     "snapshot_id": self.snapshot_id}
-        cur = self.columns()
-        names = [c.name for c in cur]
-        resolved = self._read_mor(sel, cur)
-        changes = resolved.select(*names, F.col(OP_COL), F.col(DELTA_LSN))
-        touched = sorted(int(b) for b in sel)
-        return self.merge_arrow(
-            changes,
-            epoch_key=epoch_key or f"compact:{self.snapshot_id + 1}",
-            lsn_col=DELTA_LSN,
-            touched_buckets=touched,
-            replace_state=True,
+        markers = self.spark.createDataFrame([(b,) for b in touched], f"{BUCKET_COL} int") \
+            .select(*[F.lit(None).cast(c.type).alias(c.name) for c in self.columns()],
+                    F.lit(None).cast("string").alias(OP_COL),
+                    F.lit(-1).cast("long").alias(MERGE_LSN), BUCKET_COL)
+        return self._commit_fold(
+            self.balanced_fold_repartition(markers, len(touched)),
+            epoch_key or f"compact:{self.snapshot_id + 1}", MERGE_LSN, None,
+            touched, prepared=True, mode="lww", operation="compact",
         )
 
     def audit_changes(
@@ -822,13 +778,12 @@ class LakeTable:
         return self.merge(doomed, epoch_key, lineage=lineage, touched_buckets=touched)
 
     def _commit_noop(self, epoch_key: str, lineage: dict | None) -> dict:
-        new_sid = self.snapshot_id + 1
+        m = self._child_manifest("merge-noop", epoch_key)
         # deferred lineage values are NOT resolved here: a noop commit ran
         # no action, so an Observation-backed callable would block forever
         lin = {k: (None if callable(v) else v) for k, v in (lineage or {}).items()}
-        lin.update({"epoch_key": epoch_key, "snapshot_id": new_sid,
+        lin.update({"epoch_key": epoch_key, "snapshot_id": m["snapshot_id"],
                     "n_upserts": 0, "n_deletes": 0, "buckets_touched": []})
-        m = self._child_manifest(new_sid, "merge-noop", epoch_key)
         self._append_lineage(lin)
         self._commit(m)
         self._m = m
@@ -840,10 +795,9 @@ class LakeTable:
         SURVEY.md §2.7/§4.4). Idempotent under epoch_key for resume."""
         if epoch_key is not None and epoch_key in self.applied_epochs():
             return {"skipped": True, "epoch_key": epoch_key, "snapshot_id": self.snapshot_id}
-        new_sid = self.snapshot_id + 1
-        m = self._child_manifest(new_sid, "evolve", epoch_key)
-        cols = [ColumnSpec.from_json(d) for d in m["schema_versions"][str(m["schema_version"])]]
-        cols = mutate(m, cols)
+        m = self._child_manifest("evolve", epoch_key)
+        new_sid = m["snapshot_id"]
+        cols = mutate(m, self.columns())
         new_v = m["schema_version"] + 1
         m["schema_version"] = new_v
         m["schema_versions"][str(new_v)] = [c.to_json() for c in cols]
@@ -911,15 +865,28 @@ class LakeTable:
         return self._evolve(epoch_key, mut)
 
     # -------------------------------------------------------------- internals
-    def _child_manifest(self, new_sid: int, operation: str, epoch_key: str | None) -> dict:
+    def _child_manifest(self, operation: str, epoch_key: str | None) -> dict:
+        """The next snapshot's manifest; a stale handle raises
+        CommitConflict here, before its commit writes anything."""
+        self._ensure_current()
         m = json.loads(json.dumps(self._m))  # deep copy
         m["parent"] = self._m["snapshot_id"]
-        m["snapshot_id"] = new_sid
+        m["snapshot_id"] = self._m["snapshot_id"] + 1
         m["operation"] = operation
         m["epoch_key"] = epoch_key
         if epoch_key is not None:
             m["applied_epochs"] = m["applied_epochs"] + [epoch_key]
         return m
+
+    def _ensure_current(self) -> None:
+        """Raise CommitConflict unless ``_current`` still names this
+        handle's snapshot (two writers racing between this check and the
+        pointer flip are not caught)."""
+        sid = _read_current(self.root)
+        if sid != self.snapshot_id:
+            raise CommitConflict(
+                f"{self.root}: current snapshot is {sid}, this handle holds "
+                f"{self.snapshot_id}; reload the table and retry")
 
     def _commit(self, manifest: dict) -> None:
         """Write snapshot manifest, then atomically flip the _current
@@ -927,6 +894,8 @@ class LakeTable:
         files that no manifest references — same failure model as
         Iceberg; a crash after the flip is a completed commit and the
         epoch_key makes any retry a no-op."""
+        if manifest["parent"] is not None:
+            self._ensure_current()
         sid = manifest["snapshot_id"]
         _atomic_write(os.path.join(self.root, "snapshots", f"{sid}.json"),
                       json.dumps(manifest, indent=1, default=str))
@@ -936,8 +905,9 @@ class LakeTable:
         """Maintenance (Iceberg expire_snapshots analog): delete manifest
         files and data directories referenced ONLY by snapshots older
         than the last ``keep_last``. Time travel to expired snapshots
-        stops working (as in Iceberg); applied_epochs/lineage live in the
-        current manifest, so exactly-once is unaffected."""
+        stops working (as in Iceberg); applied_epochs live in the current
+        manifest and lineage in the ``_lineage.jsonl`` side log, so
+        exactly-once and lineage are unaffected."""
         import shutil
 
         chain = []

@@ -7,7 +7,7 @@ import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
-from agr_loader_spark.lake.table import OP_COL, LakeTable
+from agr_loader_spark.lake.table import OP_COL, CommitConflict, LakeTable
 
 COLS = [("doc_id", "string", "doc_id"), ("tokens", "array<int>", "tokens"),
         ("n_tok", "int", "n_tok"), ("source", "string", "source")]
@@ -44,6 +44,37 @@ def test_exactly_once_skip(spark, tmproot):
     # reload from disk sees the same applied epoch set
     t2 = LakeTable.load(spark, t.root)
     assert "0:0" in t2.applied_epochs()
+
+
+def test_stale_handle_commit_raises_conflict(spark, tmproot):
+    """A handle whose snapshot is no longer current must not commit: its
+    fold would stage files under the snapshot id the other handle
+    already committed, overwriting that snapshot's data files."""
+    _mk(spark, tmproot, n_buckets=1)
+    a = LakeTable.load(spark, tmproot + "/t")
+    b = LakeTable.load(spark, tmproot + "/t")
+    a.merge(_changes(spark, [("x", [1], 1, "FB", "U")]), "a:0")
+    part = os.path.join(a.root, "data", "1", "__bucket=0", "part-0.parquet")
+    with open(part, "rb") as f:
+        committed = f.read()
+    y = _changes(spark, [("y", [2], 1, "FB", "U")])
+    for commit in (lambda: b.merge(y, "b:0"),
+                   lambda: b.merge(y.filter("false"), "b:0", touched_buckets=[]),
+                   lambda: b.add_column("lang", "string", epoch_key="b:1"),
+                   lambda: b.delete_where("n_tok > 0", "b:2")):
+        with pytest.raises(CommitConflict):
+            commit()
+    t = LakeTable.load(spark, a.root)
+    assert t.snapshot_id == 1 and t.applied_epochs() == {"a:0"}
+    assert [(r["doc_id"], r["tokens"]) for r in t.read().collect()] == [("x", [1])]
+    assert [(r["doc_id"], r["tokens"]) for r in t.at_snapshot(1).read().collect()] \
+        == [("x", [1])]
+    with open(part, "rb") as f:
+        assert f.read() == committed
+    assert [r["epoch_key"] for r in t.lineage()] == ["a:0"]
+    # a reloaded handle commits as usual
+    assert not t.merge(y, "b:0")["skipped"]
+    assert sorted(r["doc_id"] for r in t.read().collect()) == ["x", "y"]
 
 
 def test_copy_on_write_touches_only_changed_buckets(spark, tmproot):

@@ -40,6 +40,9 @@ def test_delta_lww_across_commits(spark, tmproot):
     rows = {r["doc_id"]: r.asDict() for r in t.read().collect()}
     assert set(rows) == {"a", "c"}
     assert rows["a"]["tokens"] == [9]
+    # resolved per bucket by the fold's kernel: no shuffle, no JVM agg
+    plan = t.read()._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "Exchange" not in plan
     # delta files accumulated, base untouched
     fs = t._m["buckets"]
     kinds = [fe.get("kind", "base") for files in fs.values() for fe in files]
@@ -92,16 +95,73 @@ def test_delta_all_tombstoned_bucket_empties_on_compact(spark, tmproot):
     t.merge_delta(_ch(spark, [("a", None, None, None, "D", 2)]), "1:0",
                   lsn_col="event_lsn")
     assert t.read().count() == 0
-    # the copy-on-write fold reads base files only: it refuses buckets
-    # that still carry delta files instead of taking tombstones as rows
-    upsert_b = _ch(spark, [("b", [2], 1, "FB", "U", 3)]).drop("event_lsn")
-    with pytest.raises(ValueError, match="compact"):
-        t.merge(upsert_b, "2:0")
-    t.compact()
+    res = t.compact()
+    assert (res["n_upserts"], res["n_deletes"]) == (0, 0)
+    assert t.history()[-1]["operation"] == "compact"
     assert t.read().count() == 0
     assert all(files == [] for files in t._m["buckets"].values())
+    upsert_b = _ch(spark, [("b", [2], 1, "FB", "U", 3)]).drop("event_lsn")
     t.merge(upsert_b, "2:0")
     assert [r["doc_id"] for r in t.read().collect()] == ["b"]
+
+
+def _mor_twin(spark, root):
+    """A table whose every bucket carries a base file and delta files:
+    keys overwritten, tombstoned and resurrected across commits, with an
+    older lsn arriving in a later delta."""
+    t = LakeTable.create(spark, root, COLS, key="doc_id", n_buckets=2)
+    t.merge_arrow(_ch(spark, [(f"d{i}", [i], 1, "FB", "U", i) for i in range(12)]),
+                  "0:0", lsn_col="event_lsn")
+    t.merge_delta(_ch(spark, [("d0", [100], 2, "WB", "U", 20),
+                              ("d1", None, None, None, "D", 21),
+                              ("d2", None, None, None, "D", 22),
+                              ("n0", [7], 3, "MGI", "U", 23),
+                              ("n1", [8], 3, "MGI", "U", 24)]),
+                  "1:0", lsn_col="event_lsn")
+    t.merge_delta(_ch(spark, [("d0", [99], 2, "WB", "U", 5),  # older: loses
+                              ("d2", [202], 2, "RGD", "U", 30),
+                              ("n1", None, None, None, "D", 31),
+                              ("d3", None, None, None, "D", 32)]),
+                  "2:0", lsn_col="event_lsn")
+    assert all(any(fe.get("kind") == "delta" for fe in fs)
+               for fs in t._m["buckets"].values())
+    return t
+
+
+_BATCH = [("d0", [1000], 9, "ZFIN", "U"), ("d1", [1001], 9, "ZFIN", "U"),
+          ("d3", [1003], 9, "ZFIN", "U"), ("n0", [1004], 9, "ZFIN", "U"),
+          ("n9", [1009], 9, "ZFIN", "U"), ("d2", None, None, None, "D"),
+          ("d5", None, None, None, "D")]
+
+
+def _commit(t, spark, case):
+    if case == "delete_where":
+        return t.delete_where("n_tok >= 2", "3:0")
+    ch = spark.createDataFrame(
+        _BATCH, "doc_id string, tokens array<int>, n_tok int, source string, __op string")
+    return t.merge(ch, "3:0", mode=case)
+
+
+@pytest.mark.parametrize("case", ["lww", "update_only", "insert_if_absent",
+                                  "delete_where"])
+def test_cow_commit_over_deltas_equals_compact_first(spark, tmproot, case):
+    direct = _mor_twin(spark, f"{tmproot}/direct")
+    first = _mor_twin(spark, f"{tmproot}/first")
+    assert not first.compact().get("skipped")
+    r = _commit(direct, spark, case)
+    _commit(first, spark, case)
+    rows = lambda t: sorted((x["doc_id"], x["tokens"], x["n_tok"], x["source"])
+                            for x in t.read().collect())
+    assert rows(direct) == rows(first)
+    assert r["buckets_touched"]
+    for b in r["buckets_touched"]:
+        files = direct._m["buckets"][str(b)]
+        assert len(files) <= 1 and all("kind" not in fe for fe in files)
+    got = {k for k, *_ in rows(direct)}
+    if case == "update_only":
+        assert "d1" not in got and "n9" not in got  # tombstoned / absent
+    if case == "insert_if_absent":
+        assert ("n0", [7], 3, "MGI") in rows(direct)  # live delta row kept
 
 
 def test_delta_schema_evolution_projection(spark, tmproot):

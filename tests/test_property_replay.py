@@ -67,3 +67,38 @@ def test_random_logs_fold_to_oracle(spark, sink, log, dup_mask, epoch_size):
         assert got == _oracle(log)
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(log=log_st, dup_mask=dup_mask_st, seg_size=st.sampled_from([2, 5, 11]))
+def test_mixed_cow_mor_segments_fold_to_oracle(spark, log, dup_mask, seg_size):
+    """Segments alternate merge_delta and merge_arrow (copy-on-write
+    commits over delta-carrying buckets), with one compact() mid-log;
+    read() equals the oracle before and after the final compact()."""
+    root = tempfile.mkdtemp(prefix="prop_mixed_")
+    try:
+        rows = [(r["doc_id"], r["tokens"], r["n_tok"], r["source"],
+                 "D" if r["op"] == "D" else "U", r["event_lsn"])
+                for r in _rows(log, dup_mask, seg_size)]
+        table = LakeTable.create(spark, root + "/t", TOKENS_TABLE_COLUMNS,
+                                 key=TOKENS_MERGE_KEY, n_buckets=4)
+        segs = [[r for r in rows if r[-1] // seg_size == s]
+                for s in range(rows[-1][-1] // seg_size + 1)]
+        for i, seg in enumerate(segs):
+            ch = spark.createDataFrame(
+                seg, "doc_id string, tokens array<int>, n_tok int, source string,"
+                     " __op string, event_lsn long")
+            commit = table.merge_delta if i % 2 == 0 else table.merge_arrow
+            commit(ch, f"{i}:0", lsn_col="event_lsn")
+            if i == len(segs) // 2:
+                table.compact()
+        want = _oracle(log)
+        read = lambda: {r["doc_id"]: list(r["tokens"]) for r in table.read().collect()}
+        assert read() == want
+        table.compact()
+        assert all(fe.get("kind", "base") == "base"
+                   for fs in table._m["buckets"].values() for fe in fs)
+        assert read() == want
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
