@@ -47,7 +47,7 @@ def q_cdc_lww_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cdc_precombine_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same final-state semantics as cdc_lww_snapshot, materialized
     END-TO-END through the COW arrow sink with the map-side LWW combine
-    on (ReplayRunner(precombine=True) -> operators/dedup.py:
+    on (ReplayRunner(precombine=True) -> lake/arrow_merge.py:
     precombine_lww -> bucket fold with exact carried counters): the
     changeset is collapsed to one winner row per key BEFORE the bucket
     shuffle. Oracle = the identical LWW SQL — proving combine + fold

@@ -1,8 +1,10 @@
 """Arrow-native state-colocated MERGE — the engine's one commit fold
 (every copy-on-write commit of LakeTable and every merge-on-read delta
 append goes through make_bucket_fold below) and its one LWW kernel
-(``lww_first``), which also resolves merge-on-read buckets for
-``LakeTable.read`` (read_bucket_state).
+(``lww_order``). The kernel also resolves merge-on-read buckets for
+``LakeTable.read`` (read_bucket_state) and collapses each map partition
+before the bucket shuffle (precombine_lww), so the LWW tie and null
+policy lives in this module only.
 
 A join-based merge expresses the upsert as winners-agg + semi-join +
 full-outer join + repartition: ~8 stages per micro-batch, and at
@@ -21,9 +23,10 @@ cores). This module collapses the whole merge into TWO stages:
            - projects old-schema files onto the current schema by field
              id (rename/null-fill/widen — Iceberg-style), and resolves
              merge-on-read delta files with the same LWW kernel,
-           - LWW-folds the batch: sort by (key, lsn desc), keep the first
-             row per key (exact (key, lsn) re-delivery dedup is free
-             because bucket co-location puts all copies in one task),
+           - LWW-folds the batch: sort only the narrow (key, lsn desc)
+             columns, take the first row per key (exact (key, lsn)
+             re-delivery dedup is free because bucket co-location puts
+             all copies in one task) — the payload is never sorted —
              then replaces / keeps / drops the state rows of the keys
              the batch touched,
            - writes the new bucket file itself (atomic tmp+rename), and
@@ -57,7 +60,6 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-from ..operators.dedup import MIN_LSN_COL
 from ..zipcache import keep_zip_directory_cache
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -67,6 +69,9 @@ MERGE_MODES = ("lww", "insert_if_absent", "update_only")  # see make_bucket_fold
 
 DELTA_LSN = "__lsn"
 DELTA_SEQ = "__seq"
+#: per-key min lsn that precombine_lww adds to each winner row: the fold
+#: reports a bucket's source-offset range from it
+MIN_LSN_COL = "__min_lsn"
 
 _ARROW_TYPES = {
     "string": pa.string(),
@@ -124,13 +129,16 @@ def _repeats(col: pa.ChunkedArray) -> np.ndarray:
     return np.concatenate([[False], same.to_numpy(zero_copy_only=False)])
 
 
-def lww_first(t: pa.Table, key: str, ranks: list[str]) -> tuple[pa.Table, np.ndarray]:
-    """The LWW kernel: sort ``t`` by key ascending, then by each rank
-    column descending (nulls last), and mark the first row of each key
-    — its winner. Returns the sorted table and that mask."""
+def lww_order(t: pa.Table, key: str, ranks: list[str]) -> tuple[np.ndarray, np.ndarray]:
+    """The LWW kernel. A stable sort of only the narrow columns: ``key``
+    ascending, then each rank column descending, nulls last, so ties
+    keep input order. Returns the row order and, per sorted row, whether
+    it is the first of its key — the key's winner. Callers take only the
+    rows they keep; the payload is never sorted."""
     sort_keys = [(key, "ascending")] + [(r, "descending") for r in ranks]
-    t = t.take(pc.sort_indices(t, sort_keys=sort_keys, null_placement="at_end"))
-    return t, ~_repeats(t[key])
+    order = pc.sort_indices(t.select([key, *ranks]), sort_keys=sort_keys,
+                            null_placement="at_end")
+    return order.to_numpy(), ~_repeats(t[key].take(order))
 
 
 def read_bucket_state(
@@ -144,7 +152,7 @@ def read_bucket_state(
     """A bucket's live rows under the current schema. Each file is
     projected by field id (rename / null-fill / widen). When the bucket
     carries merge-on-read delta files, LWW resolves the whole file list
-    with ``lww_first``: base rows rank as (__lsn, __seq) = (-1, -1), so
+    with ``lww_order``: base rows rank as (__lsn, __seq) = (-1, -1), so
     any delta event beats them and later commits break (key, lsn) ties;
     only winners whose op is 'U' are live."""
     has_delta = any(fe.get("kind") == "delta" for fe in files)
@@ -172,8 +180,67 @@ def read_bucket_state(
     state = pa.concat_tables(tables)
     if not has_delta:
         return state
-    state, first = lww_first(state, key, [DELTA_LSN, DELTA_SEQ])
-    return state.filter(first & _mask(pc.equal(state[op_col], "U"))).select(names)
+    order, first = lww_order(state, key, [DELTA_LSN, DELTA_SEQ])
+    live = first & _mask(pc.equal(state[op_col].take(order), "U"))
+    return state.select(names).take(order[live])
+
+
+def precombine_winners(t: pa.Table, key: str, lsn_col: str) -> pa.Table:
+    """One partition's LWW winners, key-sorted and null keys dropped,
+    each with ``__min_lsn``: the least lsn of its key."""
+    order, first = lww_order(t, key, [lsn_col])
+    heads = np.flatnonzero(first)
+    # a key's run is sorted lsn descending: its last row has the min lsn
+    tails = np.append(heads[1:], len(first))[: len(heads)] - 1
+    named = _mask(pc.is_valid(t[key].take(order[heads])))
+    min_lsn = t[lsn_col].take(order[tails[named]]).cast(pa.int64())
+    return t.take(order[heads[named]]).append_column(MIN_LSN_COL, min_lsn)
+
+
+def precombine_lww(df, key: str = "doc_id", lsn_col: str = "event_lsn"):
+    """Map-local LWW combine: collapse each input partition of ``df`` to
+    one winner row per key, plus ``__min_lsn``, before the bucket shuffle.
+
+    Why: on an update-heavy (zipf) change feed most shuffled bytes are
+    LWW losers, payloads the bucket fold would discard. Collapsing them
+    inside each map task drops them before the shuffle, with no added
+    exchange and bounded memory (one input split per task).
+
+    Why ``mapInArrow`` and not a ``groupBy(key)`` aggregation: a
+    payload-carrying argmax (``max_by(struct(payload), lsn)``) plans as
+    SortAggregate, a full per-partition payload sort, and collect-style
+    counters switch it to ObjectHashAggregate with unbounded per-key
+    state; both measured slower and noisier than no combine at all
+    (BENCH/BASELINE.md round-4 precombine section). Here ``lww_order``
+    sorts only the narrow (key, lsn) columns and the winners alone are
+    taken.
+
+    Semantics: within a partition the max-lsn row per key survives (on a
+    (key, lsn) tie, a re-delivery with the same payload, the first in
+    input order) and null keys are dropped. ``__min_lsn`` keeps the
+    fold's per-bucket source-offset range exact. The fold resolves
+    winners across partitions. Re-delivery counts cannot be measured
+    after the collapse: the replay runner reports HLL estimates, and
+    ``ReplayRunner(precombine=False)`` keeps the fold's exact counts.
+    The final table state is the same either way.
+    """
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    # NOTE: StructType.add mutates in place — never call it on df.schema
+    out_schema = StructType(
+        list(df.schema.fields) + [StructField(MIN_LSN_COL, LongType())]
+    )
+
+    def _combine(batches):
+        keep_zip_directory_cache()
+        batches = list(batches)
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
+        if t.num_rows:
+            yield from precombine_winners(t, key, lsn_col).to_batches()
+
+    return df.mapInArrow(_combine, out_schema)
 
 
 def _mask(cond) -> np.ndarray:
@@ -242,8 +309,8 @@ def make_bucket_fold(
     outranks its key's state row whatever its lsn.
 
     ``precombined``: the changeset already went through
-    operators.dedup.precombine_lww — at most one winner row per key per
-    map partition, carrying ``__min_lsn`` (PRECOMBINE_COLS) for the
+    precombine_lww — at most one winner row per key per
+    map partition, carrying ``__min_lsn`` (MIN_LSN_COL) for the
     per-bucket offset range. Re-delivery dedup counters are unmeasurable
     after the local collapse: n_dups is 0 (the commit records no dup
     count; the replay runner adds HLL estimates) and n_upserts counts
@@ -257,7 +324,13 @@ def make_bucket_fold(
             pa.field(op_col, pa.string()), pa.field(DELTA_LSN, pa.int64()),
             pa.field(DELTA_SEQ, pa.int64())])
 
-    def fold_bucket(bucket: int, rows: pa.Table) -> dict:
+    # the columns the fold reads before it knows the winners
+    lww_cols = [key, lsn_col, op_col] + ([MIN_LSN_COL] if precombined else [])
+
+    def fold_bucket(bucket: int, t: pa.Table, idx: np.ndarray) -> dict:
+        """Fold rows ``idx`` of ``t``, one bucket's: only the LWW columns
+        are taken until the winners are known."""
+        rows = t.select(lww_cols).take(idx)
         lsns = rows[lsn_col]
         b_min_lsn = pc.min(rows[MIN_LSN_COL] if precombined else lsns).as_py()
         b_max_lsn = pc.max(lsns).as_py()
@@ -267,15 +340,16 @@ def make_bucket_fold(
         state = read_bucket_state(bucket_files.get(bucket, []), schema_versions,
                                   current, root, key, op_col)
         t1 = time.perf_counter()
-        # LWW: after the sort the first row of each key carries its max
+        # LWW: in sorted order the first row of each key carries its max
         # lsn; a repeated (key, lsn) is a re-delivered event
-        rows, first = lww_first(rows, key, [lsn_col])
+        order, first = lww_order(rows, key, [lsn_col])
         dup = np.zeros(len(first), bool) if precombined \
-            else ~first & _repeats(rows[lsn_col])
-        is_u = _mask(pc.equal(rows[op_col], "U"))
-        win_mask = first & _mask(pc.is_valid(rows[key]))
-        win = rows.filter(win_mask)
-        win_u, win_d = is_u[win_mask], _mask(pc.equal(win[op_col], "D"))
+            else ~first & _repeats(rows[lsn_col].take(order))
+        ops = rows[op_col].take(order)
+        is_u = _mask(pc.equal(ops, "U"))
+        win_mask = first & _mask(pc.is_valid(rows[key].take(order)))
+        win = t.take(idx[order[win_mask]])
+        win_u, win_d = is_u[win_mask], _mask(pc.equal(ops, "D"))[win_mask]
         if mode == "delta":
             out = win.select(names + [op_col, lsn_col]).rename_columns(
                 names + [op_col, DELTA_LSN])
@@ -329,12 +403,13 @@ def make_bucket_fold(
         if not len(t):
             return
         # split the partition by bucket: one stable sort on the bucket id,
-        # then contiguous slices
+        # then contiguous slices of the row order
         order = pc.sort_indices(t[bucket_col])
         ids = t[bucket_col].take(order).to_numpy()
+        order = order.to_numpy()
         bounds = [0, *(np.flatnonzero(np.diff(ids)) + 1), len(ids)]
         yield pa.RecordBatch.from_pylist(
-            [fold_bucket(int(ids[lo]), t.take(order[lo:hi]))
+            [fold_bucket(int(ids[lo]), t, order[lo:hi])
              for lo, hi in zip(bounds[:-1], bounds[1:])],
             schema=_MANIFEST_ARROW,
         )

@@ -533,7 +533,7 @@ class LakeTable:
         resolved in the fold and end as one base file, as after a
         compact().
         ``precombined=True``: ``changes`` went through
-        operators.dedup.precombine_lww (one winner row per key per map
+        arrow_merge.precombine_lww (one winner row per key per map
         partition) — requires ``prepared=True``. The local collapse
         erased re-delivery multiplicity, so the commit records no
         ``n_duplicates_dropped`` rather than a false zero, and

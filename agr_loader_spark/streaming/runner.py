@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lake.table import OP_COL, LakeTable
-from ..operators.dedup import MIN_LSN_COL
+from ..lake.arrow_merge import MIN_LSN_COL, precombine_lww
 from ..plans.merge import plan_changeset
 
 # relative standard error of the planning pass's HLL distinct-lsn counters
@@ -61,7 +61,7 @@ class ReplayRunner:
         source_path: str | None = None,
         source_df: DataFrame | None = None,
         sink: str = "arrow",  # "arrow" (2-stage state-colocated COW) | "delta" (write-optimized MOR)
-        precombine: bool | None = None,  # arrow sink only: map-LOCAL LWW combine (operators/dedup.py:precombine_lww, Arrow-vectorized mapInArrow — NOT a groupBy agg; see its docstring for why) collapses each map partition to one winner row per key BEFORE the bucket shuffle, cutting shuffled/folded payload bytes by the feed's update multiplicity (zipf: most event volume is LWW losers) with zero added exchanges and bounded per-task memory. The combine erases re-delivery multiplicity, so lineage carries HLL estimates n_upserts_approx / n_duplicates_dropped_approx from the narrow planning pass (_plan) and n_upserts counts the upserts the fold applied; precombine=False keeps exact counters (the fold measures them). None (default) = on for the arrow sink, and bench.py re-verifies the claim every run with an uncombined probe rep rather than freezing it here (the r4 JVM-agg combine's "faster everywhere" claim was falsified by exactly such a probe; BENCH/BASELINE.md round-4 precombine section).
+        precombine: bool | None = None,  # arrow sink only: map-local LWW combine before the bucket shuffle (lake/arrow_merge.py:precombine_lww), so LWW losers' payloads are never shuffled. It erases re-delivery counts: lineage then carries HLL estimates from the planning pass, and False keeps the fold's exact counts. None = on for the arrow sink; bench.py re-measures it against an uncombined probe rep every run (BENCH/BASELINE.md round-4 precombine section).
         pipeline: bool = False,  # async fold overlap: prefetch the next segment's scan+shuffle (schema-aware) under the current fold (the overlap win flips sign across hosts/topologies — r3 measured it +53% wall, the r4 host measured it faster; bench.py re-measures it with a probe rep every run)
         compact_at_end: bool = True,  # delta sink only: collapse MOR deltas to base files after the last segment (inside run(), so measured walls are apples-to-apples with the COW sink)
         prune_applied: bool = True,  # resume: skip fully-applied epochs BEFORE the planning scan (via the epoch_final lineage stamp), so resuming a 10^10-event replay near its end re-scans only the tail, not the whole log. Relies on the binlog invariant that an epoch partition is immutable once its final segment committed (events are lsn-total-ordered, so appending to an already-applied epoch would be out-of-order anyway). Set False for a source that violates it.
@@ -242,10 +242,7 @@ class ReplayRunner:
             cond = cond & (F.col("event_lsn") < hi)
         seg = base.filter(cond).drop("epoch")
         if self.precombine:
-            from ..operators.dedup import precombine_lww
-
-            seg = precombine_lww(seg, key=self.table.key, op_col=OP_COL,
-                                 lsn_col="event_lsn")
+            seg = precombine_lww(seg, key=self.table.key, lsn_col="event_lsn")
         # fold_partitions is a pure function of its inputs and the
         # manifest, so this is the p the placement below uses
         p = self.table.fold_partitions(n_touched, n_rows)

@@ -472,7 +472,7 @@ def test_precombined_n_upserts_counts_applied_upserts(spark, tmproot):
     """A precombined commit counts the upserts it applied, not the state
     rows its bucket rewrite kept: 10 keys, then 1 key, into one bucket."""
     from agr_loader_spark.lake.table import BUCKET_COL
-    from agr_loader_spark.operators.dedup import precombine_lww
+    from agr_loader_spark.lake.arrow_merge import precombine_lww
 
     t = _mk(spark, tmproot, n_buckets=1)
 
@@ -480,7 +480,7 @@ def test_precombined_n_upserts_counts_applied_upserts(spark, tmproot):
         rows = _changes(spark, [(k, [1], 1, "FB", "U") for k in keys]) \
             .withColumn("lsn", F.lit(int(epoch_key.split(":")[0])).cast("long")) \
             .withColumn(BUCKET_COL, F.lit(0))
-        combined = precombine_lww(rows, key="doc_id", op_col=OP_COL, lsn_col="lsn")
+        combined = precombine_lww(rows, key="doc_id", lsn_col="lsn")
         return t.merge_arrow(combined.repartition(1), epoch_key, lsn_col="lsn",
                              prepared=True, precombined=True)
 

@@ -144,14 +144,13 @@ def test_precombine_plan_adds_no_exchange_and_no_sort(spark):
     partition) or ObjectHashAggregate (unbounded collect_set state) a
     JVM groupBy-based combine degenerates to — both were measured
     slower/higher-variance than no combine (BENCH/BASELINE.md r4)."""
-    from agr_loader_spark.operators.dedup import precombine_lww
+    from agr_loader_spark.lake.arrow_merge import precombine_lww
 
     df = spark.createDataFrame(
         [("d1", [1, 2], "U", 5, 0)],
         "doc_id string, tokens array<int>, __op string, event_lsn long, __bucket int",
     )
-    combined = precombine_lww(df, key="doc_id", op_col="__op",
-                              lsn_col="event_lsn")
+    combined = precombine_lww(df, key="doc_id", lsn_col="event_lsn")
     plan = _plan(combined.repartition(4, "__bucket"))
     assert "MapInArrow" in plan or "ArrowEvalPython" in plan or \
         "PythonMapInArrow" in plan, plan
